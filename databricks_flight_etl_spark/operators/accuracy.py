@@ -221,7 +221,7 @@ def release_histogram_caches() -> int:
 def _hist_cumsum(
     hist: DataFrame, value_col: str, sum_cols: list[str],
     by: list[str] | None = None, n_buckets: int = 64,
-    inclusive: bool = True, persist: bool = True,
+    inclusive: bool = True,
     bucket_on: Column | None = None,
 ) -> DataFrame:
     """DISTRIBUTED running sum over a (by…, value, counts…) histogram —
@@ -244,14 +244,13 @@ def _hist_cumsum(
     partitions, where the one-level window this replaced collapsed it
     onto a single task.
 
-    The histogram is pinned (MEMORY_AND_DISK) by default: three
-    consumers (bucket sums, the window join, callers' totals) would
-    otherwise each re-execute the lineage back to the raw scan —
-    the plan audit showed 8 source scans on the unpinned KS form.
-    Every pin is registered so :func:`release_histogram_caches` can
-    free them (the returned frame is lazy, so neither this function
-    nor its callers can unpersist before the caller's action);
-    ``persist=False`` opts out entirely for one-shot lineages.
+    The histogram is always pinned (MEMORY_AND_DISK): three consumers
+    (bucket sums, the window join, callers' totals) would otherwise
+    each re-execute the lineage back to the raw scan — the plan audit
+    showed 8 source scans on the unpinned KS form. Every pin is
+    registered so :func:`release_histogram_caches` can free them (the
+    returned frame is lazy, so neither this function nor its callers
+    can unpersist before the caller's action).
 
     ``bucket_on`` generalizes level 1 beyond numeric value columns: a
     NUMERIC column expression over ``hist`` that is monotone
@@ -267,12 +266,11 @@ def _hist_cumsum(
     test_ks_statistic_bucket_count_invariant)."""
     from pyspark.sql import Window
 
-    by = list(by or [])
-    if persist:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        hist = hist.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_pin(hist)
+    by = list(by or [])
+    hist = hist.persist(StorageLevel.MEMORY_AND_DISK)
+    _register_pin(hist)
     vd = (
         F.col(value_col).cast("double")
         if bucket_on is None
@@ -650,7 +648,15 @@ def chi_square_independence(
     obs = df.groupBy(col_a, col_b).agg(F.count(F.lit(1)).alias("o"))
     ra = df.groupBy(col_a).agg(F.count(F.lit(1)).alias("ra"))
     rb = df.groupBy(col_b).agg(F.count(F.lit(1)).alias("rb"))
-    tot = df.agg(F.count(F.lit(1)).alias("n"))
+    # dof rides the 1-row total aggregate over the RAW rows (one action
+    # for the whole result). The struct wrapper makes a NULL category
+    # count as a distinct value, matching the marginals' null group;
+    # ``cells`` cannot supply it, because its equi-joins drop null keys.
+    tot = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_distinct(F.struct(col_a)).alias("__ka"),
+        F.count_distinct(F.struct(col_b)).alias("__kb"),
+    )
     cells = (
         obs.join(F.broadcast(ra), col_a)
         .join(F.broadcast(rb), col_b)
@@ -664,20 +670,12 @@ def chi_square_independence(
             "n",
         )
     )
-    # dof rides the stat aggregate (r15: two fewer eager count() jobs —
-    # guide §1.2 step 1, every action is a pass at scale). Every df row
-    # lands in some observed cell, so distinct col_a/col_b over ``cells``
-    # equals ra.count()/rb.count() exactly; the struct wrapper makes a
-    # NULL category count as a distinct value, matching the groupBy's
-    # null group. Cast pins dof to the certified int type (count_distinct
-    # returns long).
     stat = cells.agg(
         F.sum((F.col("o") - F.col("e")) * (F.col("o") - F.col("e"))
               / F.col("e")).alias("chi2"),
         F.first("n").alias("n"),
-        F.count_distinct(F.struct(col_a)).alias("__ka"),
-        F.count_distinct(F.struct(col_b)).alias("__kb"),
-    )
+    ).crossJoin(F.broadcast(tot.select("__ka", "__kb")))
+    # cast pins dof to the certified int type (count_distinct is long)
     return stat.select(
         F.round("chi2", decimals).alias("chi2"),
         ((F.col("__ka") - 1) * (F.col("__kb") - 1))
@@ -1143,7 +1141,7 @@ def grouped_pearson(
 def _ks_cumulative(
     df: DataFrame, value_col: str, group_col: str,
     group_a, group_b, by: list[str], n_buckets: int,
-    max_points: int | None, persist: bool,
+    max_points: int | None,
 ):
     """Shared KS engine: per-(by…, value) cumulative a/b counts via the
     library's distributed two-level prefix-sum (:func:`_hist_cumsum` —
@@ -1198,7 +1196,6 @@ def _ks_cumulative(
     )
     cum = _hist_cumsum(
         hist, "__v", ["__ca", "__cb"], by=by, n_buckets=n_buckets,
-        persist=persist,
     ).select(
         *by,
         F.col("__cum___ca").alias("__cuma"),
@@ -1219,7 +1216,6 @@ def ks_statistic(
     df: DataFrame, value_col: str, group_col: str,
     group_a, group_b, decimals: int = 6,
     n_buckets: int = 64, max_points: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """EXACT two-sample Kolmogorov–Smirnov statistic between the value
     distributions of two groups: ``max |F_a(x) − F_b(x)|`` over the
@@ -1250,7 +1246,7 @@ def ks_statistic(
     value distributions."""
     cum, totals = _ks_cumulative(
         df, value_col, group_col, group_a, group_b, [], n_buckets,
-        max_points, persist,
+        max_points,
     )
     dmax = cum.crossJoin(F.broadcast(totals)).agg(
         F.round(
@@ -1274,7 +1270,6 @@ def ks_statistic_grouped(
     df: DataFrame, value_col: str, group_col: str,
     group_a, group_b, by: list[str], decimals: int = 6,
     n_buckets: int = 64, max_points: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Per-segment two-sample KS in ONE pass — the drift-monitor shape
     (:func:`ks_statistic` per ``by`` group, e.g. per country or per
@@ -1289,7 +1284,7 @@ def ks_statistic_grouped(
         raise ValueError("by must name at least one grouping column")
     cum, totals = _ks_cumulative(
         df, value_col, group_col, group_a, group_b, list(by), n_buckets,
-        max_points, persist,
+        max_points,
     )
     gaps = cum.join(totals, list(by)).select(
         *by,

@@ -23,7 +23,7 @@ from pyspark.storagelevel import StorageLevel
 from ..partitioning import spread
 
 
-def _pin(df: DataFrame, persist: bool) -> DataFrame:
+def _pin(df: DataFrame) -> DataFrame:
     """Persist a subplan that downstream code references more than once.
 
     Without this, every reference to a self-joined side re-executes the
@@ -32,7 +32,7 @@ def _pin(df: DataFrame, persist: bool) -> DataFrame:
     instead of failing; callers running many one-shot jobs can
     ``spark.catalog.clearCache()`` between them, and long-lived 100 TB
     pipelines should checkpoint these tables to parquet instead."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK) if persist else df
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 __all__ = [
     "normalize_text",
@@ -157,8 +157,8 @@ def _shingle_arrays(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFr
 
 
 def _staged_shingles(
-    df: DataFrame, text_col: str, id_col: str, k: int, persist: bool,
-) -> tuple[DataFrame | None, DataFrame | None]:
+    df: DataFrame, text_col: str, id_col: str, k: int,
+) -> tuple[DataFrame, DataFrame]:
     """ONE pinned normalize+shingle pass shared by every stage of a
     near-dup entry point — the guard's entropy aggregate, the stop-list
     document-frequency pass, the signature aggregate, and the verify's
@@ -176,16 +176,10 @@ def _staged_shingles(
     shingle transform. Aggregate consumers (min / count / sum) are
     order-insensitive, so sharing cannot perturb any certified value.
 
-    ``persist=False`` returns ``(None, None)``: the unpinned flow keeps
-    the documented streaming-pass shapes — pinning a corpus-scale
-    table to MEMORY_AND_DISK is exactly the disk-pressure hazard the
-    guard's docstring describes, so opting out of caching opts out of
-    staging too. Memory note for the pinned path: callers previously
-    pinned the exploded long table (stop-list path) AND the verify's
-    array table; one array-form pin is strictly smaller than either."""
-    if not persist:
-        return None, None
-    arrs = _pin(_shingle_arrays(df, text_col, id_col, k), True)
+    Memory note: the ARRAY form is what gets pinned — one row per doc
+    is strictly smaller than the exploded (id, shingle) table, which
+    repeats the id per shingle."""
+    arrs = _pin(_shingle_arrays(df, text_col, id_col, k))
     st = arrs.select("__id", F.explode("__shs").alias("__sh"))
     return arrs, st
 
@@ -326,21 +320,20 @@ def last_guard_profile() -> dict | None:
 
 
 def _bg_jaccard_guard(
-    df: DataFrame, text_col: str, st: DataFrame,
+    st: DataFrame, arrs: DataFrame,
     guard: str, threshold: float = BG_JACCARD_GUARD,
     caller: str = "LSH",
-    arrs: DataFrame | None = None,
 ) -> None:
     """Default-on pre-flight entropy guard for the LSH entry points:
     computes the sums-only core of :func:`shingle_df_profile` (the
     quantile columns are skipped) over ``st`` and warns or raises when
     the closed-form background Jaccard estimate predicts a quadratic
     candidate self-join and no stop-shingle mitigation was requested.
-    Callers pass an UN-pinned shingle table on purpose: the guard is
-    one streaming shingling+aggregate pass with ZERO cache footprint —
-    pinning the corpus-scale table to MEMORY_AND_DISK just for the
-    guard would create the very disk-pressure failure mode it exists
-    to prevent (the cost is that the signature pass re-shingles).
+    Callers pass their staged shingles (see :func:`_staged_shingles`):
+    ``st`` for the document-frequency distribution and ``arrs`` — one
+    row per non-null-text doc — for the doc count. The guard's collect
+    materializes that pinned staging, which the signature and verify
+    passes then reuse, so its marginal cost is one aggregate.
 
     Why it exists: the round-8 scale probe showed that running banded
     LSH on a low-entropy corpus WITHOUT ``max_df`` produces |bucket|²
@@ -352,10 +345,7 @@ def _bg_jaccard_guard(
     NOTE this makes the entry points EAGER (ONE small Spark action — the
     df-distribution aggregate with the doc count riding along as a
     broadcast 1-row agg — runs at call time rather than at the first
-    action; r14 folded the former separate pruned-scan count job into
-    it, and ``arrs`` lets a pinned caller take the count from the staged
-    per-doc arrays instead of re-scanning the raw corpus). Pass
-    ``guard='off'`` to keep them fully lazy, or supply
+    action). Pass ``guard='off'`` to keep them fully lazy, or supply
     ``max_df``/``max_df_frac``/``stops`` — a mitigated call never runs
     the guard. Whenever the guard DOES run, its measurement is retained
     for logging — read it back via :func:`last_guard_profile` (round-9
@@ -377,15 +367,10 @@ def _bg_jaccard_guard(
     )
     # ONE action for the whole measurement (guide §1.2/§2.4: every eager
     # driver action is a full pass at corpus scale). n_docs rides along
-    # as a broadcast 1-row agg instead of a second count job; with the
-    # caller's pinned staging (``arrs``: one row per non-null-text doc,
-    # by construction of _shingle_arrays) the doc count reads the
-    # about-to-be-cached arrays instead of RE-SCANNING the raw corpus.
-    ndocs_src = (
-        arrs if arrs is not None
-        else df.where(F.col(text_col).isNotNull())
-    )
-    nd = ndocs_src.agg(F.count(F.lit(1)).alias("__n_docs"))
+    # as a broadcast 1-row agg instead of a second count job, read from
+    # the about-to-be-cached arrays (one row per non-null-text doc, by
+    # construction of _shingle_arrays) instead of re-scanning the corpus.
+    nd = arrs.agg(F.count(F.lit(1)).alias("__n_docs"))
     row = stats.crossJoin(F.broadcast(nd)).collect()[0]
     n = int(row["__n_docs"])
     global _LAST_GUARD_PROFILE
@@ -524,8 +509,7 @@ def shingle_df_profile(
 
     dfreq = _pin(
         shingle_stop_list(df, text_col, id_col, shingle_k, max_df=0,
-                          table=table),
-        persist=True,
+                          table=table)
     )  # max_df=0 → every shingle with its df
     n_docs = df.where(F.col(text_col).isNotNull()).select(
         F.count(F.lit(1)).alias("n_docs")
@@ -751,9 +735,7 @@ def minhash_probe(
     id_col: str,
     threshold: float = 0.8,
     num_perm: int = 32, bands: int = 4, shingle_k: int = 5,
-    persist: bool = True,
     hash_family: str = "xxhash64",
-    verify: str = "intersect",
     stops: DataFrame | None = None,
 ) -> DataFrame:
     """INCREMENTAL near-dup: which new documents near-duplicate the
@@ -782,8 +764,7 @@ def minhash_probe(
         minhash_bands(
             new_df, text_col, id_col, num_perm, bands, shingle_k,
             hash_family, stops=stops,
-        ).select(F.col(id_col).alias("id_a"), "band", "band_hash"),
-        persist,
+        ).select(F.col(id_col).alias("id_a"), "band", "band_hash")
     )
     idx = index_bands.select(
         F.col(id_col).alias("id_b"), "band", "band_hash"
@@ -792,15 +773,13 @@ def minhash_probe(
         new_bands.join(idx, ["band", "band_hash"])
         .where(F.col("id_a") != F.col("id_b"))
         .select("id_a", "id_b")
-        .distinct(),
-        persist,
+        .distinct()
     )
     both = new_df.select(F.col(id_col), F.col(text_col)).unionByName(
         corpus_df.select(F.col(id_col), F.col(text_col))
     )
     out = _jaccard_verified(
-        both, text_col, id_col, cands, threshold, shingle_k, persist,
-        strategy=verify, stops=stops,
+        both, text_col, id_col, cands, threshold, shingle_k, stops=stops,
     )
     return out.select(
         F.col("id_a").alias("new_id"),
@@ -833,7 +812,6 @@ def auto_bands(num_perm: int, threshold: float) -> int:
 def minhash_candidate_pairs(
     df: DataFrame, text_col: str, id_col: str,
     num_perm: int = 32, bands: int = 4, shingle_k: int = 5,
-    persist: bool = True,
     hash_family: str = "xxhash64",
     stops: DataFrame | None = None,
     table: DataFrame | None = None,
@@ -856,8 +834,7 @@ def minhash_candidate_pairs(
         minhash_bands(
             df, text_col, id_col, num_perm, bands, shingle_k, hash_family,
             stops=stops, table=table,
-        ).select(F.col(id_col).alias("__id"), "band", "band_hash"),
-        persist,
+        ).select(F.col(id_col).alias("__id"), "band", "band_hash")
     )
     left = long.select(
         F.col("__id").alias("id_a"), "band", "band_hash"
@@ -875,30 +852,20 @@ def minhash_candidate_pairs(
 
 def _jaccard_verified(
     df: DataFrame, text_col: str, id_col: str, pairs: DataFrame,
-    threshold: float, shingle_k: int, persist: bool = True,
-    strategy: str = "intersect",
+    threshold: float, shingle_k: int,
     stops: DataFrame | None = None,
     arrs: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs. Two physical
-    strategies, identical results (both compute |A∩B| over DISTINCT
-    shingles exactly — pinned equal by test):
-
-    - ``intersect`` (default): join each pair to its two per-doc
-      shingle arrays and take ``size(array_intersect(a, b))`` per row —
-      two equi-joins, no explode/agg, and EXACT string intersection (no
-      hash step at all). Measured 5.5 s → 2.3 s cold at sf0.1 (the
-      inverted-index plan pays 3 extra shuffles + their codegen
-      compiles on kilobyte inputs — the r4 q_textprep_pipeline
-      regression's real cost). Per-pair work/memory is O(|A|+|B|),
-      the same arrays `_shingle_arrays` materializes anyway; the
-      shuffle payload is the candidate docs' shingle arrays (≈ text
-      size).
-    - ``index``: explode to (id, shingle-hash) rows and count matches
-      per pair via the inverted index — the join payload is 8 fixed
-      bytes per shingle, never the text, so prefer it when candidate
-      docs are huge (≫ MB) or a hot doc appears in very many pairs
-      (its array would be duplicated per pair under ``intersect``).
+    """Exact shingle-set Jaccard for candidate pairs: join each pair to
+    its two pinned per-doc shingle arrays and take
+    ``size(array_intersect(a, b))`` per row — two equi-joins, no
+    explode/agg, and EXACT string intersection over DISTINCT shingles
+    (no hash step at all). Measured 5.5 s → 2.3 s cold at sf0.1 against
+    an inverted-index plan, which paid 3 extra shuffles + their codegen
+    compiles on kilobyte inputs (the r4 q_textprep_pipeline
+    regression's real cost). Per-pair work/memory is O(|A|+|B|), the
+    same arrays `_shingle_arrays` materializes anyway; the shuffle
+    payload is the candidate docs' shingle arrays (≈ text size).
 
     Only docs that appear in some candidate pair are even SHINGLED
     (left-semi prune on the raw docs, before the shingle projection) —
@@ -910,10 +877,6 @@ def _jaccard_verified(
     re-normalizing + re-shingling the pruned raw docs, and the
     narrow-scan probe (a full physical planning of the corpus
     projection) is skipped entirely."""
-    if strategy not in ("intersect", "index"):
-        raise ValueError(
-            f"strategy must be 'intersect' or 'index', got {strategy!r}"
-        )
     ids = (
         pairs.select(F.col("id_a").alias("__id"))
         .unionByName(pairs.select(F.col("id_b").alias("__id")))
@@ -967,7 +930,7 @@ def _jaccard_verified(
         # boundary makes those inferred filters cheap array ops on the
         # cached rows instead.
         arrs = (
-            _pin(arrs, persist)
+            _pin(arrs)
             .select("__id", F.explode("__shs").alias("__sh"))
             .join(
                 stops.select(F.col("shingle").alias("__sh")), "__sh",
@@ -976,50 +939,22 @@ def _jaccard_verified(
             .groupBy("__id")
             .agg(F.collect_list("__sh").alias("__shs"))
         )
-    arrs = _pin(arrs, persist)
-    if strategy == "intersect":
-        a = arrs.select(
-            F.col("__id").alias("id_a"), F.col("__shs").alias("__sa")
-        )
-        b = arrs.select(
-            F.col("__id").alias("id_b"), F.col("__shs").alias("__sb")
-        )
-        out = (
-            pairs.join(a, "id_a").join(b, "id_b")
-            .withColumn(
-                "__shared", F.size(F.array_intersect("__sa", "__sb"))
-            )
-            .withColumn(
-                "jaccard",
-                F.col("__shared")
-                / (F.size("__sa") + F.size("__sb") - F.col("__shared")),
-            )
-        )
-        return out.where(F.col("jaccard") >= threshold).select(
-            "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-        )
-    # per-row set size — no groupBy over the exploded table needed
-    sizes = arrs.select("__id", F.size("__shs").alias("__sz"))
-    # join key is the shingle HASH — 8 fixed bytes through the shuffle
-    sh = arrs.select("__id", F.explode("__shs").alias("__sh")).select(
-        "__id", F.xxhash64("__sh").alias("__sh")
+    arrs = _pin(arrs)
+    a = arrs.select(
+        F.col("__id").alias("id_a"), F.col("__shs").alias("__sa")
     )
-    a = sh.select(F.col("__id").alias("id_a"), F.col("__sh"))
-    b = sh.select(F.col("__id").alias("id_b"), F.col("__sh"))
-    shared = (
-        a.join(pairs, "id_a").join(b, ["id_b", "__sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__shared"))
+    b = arrs.select(
+        F.col("__id").alias("id_b"), F.col("__shs").alias("__sb")
     )
     out = (
-        shared.join(sizes.withColumnRenamed("__id", "id_a")
-                    .withColumnRenamed("__sz", "__sza"), "id_a")
-        .join(sizes.withColumnRenamed("__id", "id_b")
-              .withColumnRenamed("__sz", "__szb"), "id_b")
+        pairs.join(a, "id_a").join(b, "id_b")
+        .withColumn(
+            "__shared", F.size(F.array_intersect("__sa", "__sb"))
+        )
         .withColumn(
             "jaccard",
             F.col("__shared")
-            / (F.col("__sza") + F.col("__szb") - F.col("__shared")),
+            / (F.size("__sa") + F.size("__sb") - F.col("__shared")),
         )
     )
     return out.where(F.col("jaccard") >= threshold).select(
@@ -1031,9 +966,8 @@ def minhash_dedup_pairs(
     df: DataFrame, text_col: str, id_col: str,
     threshold: float = 0.8, num_perm: int = 32,
     bands: int | None = 4,
-    shingle_k: int = 5, persist: bool = True,
+    shingle_k: int = 5,
     hash_family: str = "xxhash64",
-    verify: str = "intersect",
     max_df: int | None = None,
     max_df_frac: float | None = None,
     stops: DataFrame | None = None,
@@ -1042,22 +976,18 @@ def minhash_dedup_pairs(
     output: str = "pairs",
 ) -> DataFrame:
     """Near-duplicate pairs: MinHash-LSH candidates → exact Jaccard ≥
-    threshold. Output (id_a, id_b, jaccard), id_a < id_b.
-
-    ``verify`` picks the exact-Jaccard physical strategy (identical
-    results): 'intersect' (default — per-pair array_intersect, fewest
-    shuffles) or 'index' (inverted 8-byte-hash join — prefer for
-    huge documents / extremely hot candidate ids; see
-    ``_jaccard_verified``).
+    threshold. Output (id_a, id_b, jaccard), id_a < id_b; the verify
+    is ``_jaccard_verified``'s per-pair array_intersect.
 
     ``bands=None`` derives the band count from ``threshold`` via
     :func:`auto_bands` (recall-safe for any threshold); the explicit
     default stays 4 so oracle-certified configurations — whose SQL
     replays a pinned band shape — are unaffected.
 
-    ``persist`` pins the multiply-referenced intermediates (banded
-    signatures, candidate pairs, verify shingles) so each is computed
-    once instead of once per plan reference — see ``_pin``.
+    The multiply-referenced intermediates (staged shingles, banded
+    signatures, candidate pairs, verify shingles) are always pinned so
+    each is computed once instead of once per plan reference — see
+    ``_pin`` and :func:`_staged_shingles`.
 
     ``hash_family='md5'`` makes every stage engine-portable (see
     ``_base_hash``) at ~md5-vs-xxhash64 cost — the certification
@@ -1077,15 +1007,15 @@ def minhash_dedup_pairs(
     survives scale changes (see :func:`resolve_max_df`); pass one or
     the other, not both.
 
-    FOOTPRINT of the in-line df pass: with ``max_df``/``max_df_frac``
-    the full exploded shingle table (≈ shingle_k × corpus text bytes)
-    is pinned MEMORY_AND_DISK so the df pass and the signature pass
-    share one shingling — at the 100 TB regime that spill can itself
-    exhaust local disk. For corpora anywhere near that size, compute
+    FOOTPRINT of the shared staging: the per-doc shingle arrays
+    (≈ shingle_k × corpus text bytes) are pinned MEMORY_AND_DISK so the
+    guard or df pass, the signature pass and the verify share one
+    shingling — at the 100 TB regime that spill can itself exhaust
+    local disk. For corpora anywhere near that size, compute
     the (tiny) stop list ONCE with :func:`shingle_stop_list` over a
     checkpointed shingle table, persist it, and pass it here via
-    ``stops=`` — that path never caches the corpus-scale table and
-    the list is reusable across minhash/simhash/funnel runs.
+    ``stops=`` — the list is then reusable across minhash/simhash/funnel
+    runs and the in-line df pass never runs.
 
     ``guard`` ('warn' default | 'raise' | 'off'): when NO stop-shingle
     mitigation is requested, a cheap pre-flight aggregate estimates
@@ -1127,47 +1057,33 @@ def minhash_dedup_pairs(
         )
     max_df = resolve_max_df(df, text_col, max_df, max_df_frac)
     # One pinned shingle pass feeds the guard, the stop-list df pass,
-    # the signatures AND the verify arrays (see _staged_shingles);
-    # persist=False keeps the historical unpinned streaming passes.
-    arrs, st = _staged_shingles(df, text_col, id_col, shingle_k, persist)
+    # the signatures AND the verify arrays (see _staged_shingles).
+    arrs, st = _staged_shingles(df, text_col, id_col, shingle_k)
     if stops is not None:
         stops = stops.select("shingle")  # caller-supplied, never cached
     elif max_df is not None:
-        # the document-frequency pass reads the shared staging; with
-        # persist=False it builds (and does not cache) its own table —
-        # the pre-staging shape (review finding, round 8)
-        if st is None:
-            st = _shingle_table(df, text_col, id_col, shingle_k)
+        # the document-frequency pass reads the shared staging
         stops = _pin(
             shingle_stop_list(df, text_col, id_col, shingle_k, max_df,
-                              table=st),
-            persist,
+                              table=st)
         )
     elif guard != "off":
-        # pre-flight entropy check. Unpinned (persist=False) runs keep
-        # the ONE-STREAMING-PASS shape — materializing a corpus-scale
-        # table just for the guard would create the disk-pressure
-        # failure mode it exists to prevent; pinned runs aggregate over
-        # the shared staging instead (the cache is materialized by this
-        # eager collect and then reused by the signature + verify
-        # passes, so the guard's marginal cost drops to one aggregate).
+        # pre-flight entropy check over the shared staging (the cache is
+        # materialized by this eager collect and then reused by the
+        # signature + verify passes)
         _bg_jaccard_guard(
-            df, text_col,
-            st if st is not None
-            else _shingle_table(df, text_col, id_col, shingle_k),
-            guard, guard_threshold, caller="minhash_dedup_pairs",
-            arrs=arrs,
+            st, arrs, guard, guard_threshold,
+            caller="minhash_dedup_pairs",
         )
     cands = _pin(
         minhash_candidate_pairs(
-            df, text_col, id_col, num_perm, bands, shingle_k, persist,
+            df, text_col, id_col, num_perm, bands, shingle_k,
             hash_family, stops=stops, table=st,
-        ),
-        persist,
+        )
     )
     out = _jaccard_verified(
-        df, text_col, id_col, cands, threshold, shingle_k, persist,
-        strategy=verify, stops=stops, arrs=arrs,
+        df, text_col, id_col, cands, threshold, shingle_k,
+        stops=stops, arrs=arrs,
     )
     if output == "clusters":
         from .graph import connected_components
@@ -1255,7 +1171,7 @@ def simhash64(df: DataFrame, text_col: str, id_col: str,
 
 def simhash_near_dup_pairs(
     df: DataFrame, text_col: str, id_col: str,
-    max_hamming: int = 3, shingle_k: int = 5, persist: bool = True,
+    max_hamming: int = 3, shingle_k: int = 5,
     hash_family: str = "xxhash64",
     max_df: int | None = None,
     max_df_frac: float | None = None,
@@ -1308,32 +1224,24 @@ def simhash_near_dup_pairs(
         stops = stops.select("shingle")  # never cached
     elif max_df is not None:
         # one shared shingle pass for both the df pass and the
-        # signature sums (see minhash_dedup_pairs / _staged_shingles;
-        # persist=False keeps the historical unpinned table)
-        _, st = _staged_shingles(df, text_col, id_col, shingle_k, persist)
-        if st is None:
-            st = _shingle_table(df, text_col, id_col, shingle_k)
+        # signature sums (see minhash_dedup_pairs / _staged_shingles)
+        _, st = _staged_shingles(df, text_col, id_col, shingle_k)
         stops = _pin(
             shingle_stop_list(df, text_col, id_col, shingle_k, max_df,
-                              table=st),
-            persist,
+                              table=st)
         )
     elif guard != "off":
-        # guard + signature sums share one staged pass when pinned;
-        # un-pinned runs keep the streaming pass — footprint rationale
-        # on minhash_dedup_pairs
-        arrs, st = _staged_shingles(df, text_col, id_col, shingle_k, persist)
+        # guard + signature sums share one staged pass — footprint
+        # rationale on minhash_dedup_pairs
+        arrs, st = _staged_shingles(df, text_col, id_col, shingle_k)
         _bg_jaccard_guard(
-            df, text_col,
-            st if st is not None
-            else _shingle_table(df, text_col, id_col, shingle_k),
-            guard, guard_threshold, caller="simhash_near_dup_pairs",
-            arrs=arrs,
+            st, arrs, guard, guard_threshold,
+            caller="simhash_near_dup_pairs",
         )
     sig = simhash64(df, text_col, id_col, shingle_k, hash_family,
                     stops=stops, table=st)
     out = hamming_near_dup_pairs(
-        sig, "simhash", id_col, max_hamming=max_hamming, persist=persist
+        sig, "simhash", id_col, max_hamming=max_hamming
     )
     if output == "clusters":
         from .graph import connected_components
@@ -1346,7 +1254,7 @@ def simhash_near_dup_pairs(
 
 def hamming_near_dup_pairs(
     df: DataFrame, sig_col: str, id_col: str,
-    max_hamming: int = 3, persist: bool = True,
+    max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dup pairs over ANY 64-bit fingerprint column with
     Hamming(sig) ≤ max_hamming: the signature-agnostic core of
@@ -1377,7 +1285,7 @@ def hamming_near_dup_pairs(
     stack = "stack({n}, {args}) as (chunk_idx, chunk_val)".format(
         n=nchunks, args=", ".join(f"{i}, c_{i}" for i in range(nchunks))
     )
-    long = _pin(wide.select("__id", "__sig", F.expr(stack)), persist)
+    long = _pin(wide.select("__id", "__sig", F.expr(stack)))
     a = long.select(
         F.col("__id").alias("id_a"), F.col("__sig").alias("sh_a"),
         "chunk_idx", "chunk_val",
@@ -1411,7 +1319,6 @@ def ngram_jaccard_pairs(
     df: DataFrame, text_col: str, id_col: str,
     threshold: float = 0.5, shingle_k: int = 5,
     max_df: int | None = _NGRAM_MAX_DF_UNSET,  # type: ignore[assignment]
-    persist: bool = True,
     max_df_frac: float | None = None,
 ) -> DataFrame:
     """All pairs with shingle-Jaccard ≥ threshold via the inverted
@@ -1454,7 +1361,7 @@ def ngram_jaccard_pairs(
             .select("__sh")
         )
         sh = sh.join(rare, "__sh", "left_semi")
-    sh = _pin(sh, persist)  # referenced by sizes + both join sides
+    sh = _pin(sh)  # referenced by sizes + both join sides
     sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz"))
     a = sh.select(F.col("__id").alias("id_a"), "__sh")
     b = sh.select(F.col("__id").alias("id_b"), "__sh")
@@ -1544,25 +1451,11 @@ def _hash_injective(tok_stats: DataFrame) -> bool:
     return tok_stats.where(F.col("__nt") > 1).isEmpty()
 
 
-# Injectivity verdicts keyed by the token-stats plan's semantic hash
-# (r15): repeated constructions over the SAME source plan — plan
-# audits dumping every registry query, the containment twin sharing a
-# query's tokenizer lineage, re-built pipelines in one process — reuse
-# the probe's verdict instead of re-running its job. Sources are
-# treated as immutable within a process (the same assumption _pin's
-# caching already makes); frames built from in-memory rows get a fresh
-# LogicalRDD — and so a fresh semantic hash — per creation, so tests
-# and ad-hoc frames never share stale verdicts.
-_INJECTIVITY_MEMO: dict[int, bool] = {}
-
-
 def _ordered_prefixes(
     df: DataFrame,
     set_col: str,
     id_col: str,
     threshold: float,
-    persist: bool,
-    mode: str = "auto",
 ) -> tuple[DataFrame, bool]:
     """Shared PPJoin staging for set_similarity_join / containment_join:
     returns ((__id, __sorted, __prefix), hashed) where __sorted is the
@@ -1596,18 +1489,8 @@ def _ordered_prefixes(
     staging falls back to the string pipeline, preserving exactness;
     ``hashed`` tells callers which element type the arrays hold. The
     injectivity probe makes this function EAGER (one bounded action at
-    build time) — the same bounded-driver-action budget as the graph
-    module's edge gate — MEMOIZED per source plan (r15, see
-    ``_INJECTIVITY_MEMO``) so repeated constructions run zero jobs.
-
-    ``mode`` (r15) picks the staging explicitly: ``'auto'`` (default)
-    probes as above; ``'strings'`` skips the probe AND the hashed
-    staging — always exact, zero construction jobs, token-string-sized
-    shuffles; ``'hashed'`` skips the probe and TRUSTS the caller that
-    the corpus vocabulary is collision-free under xxhash64 — zero
-    construction jobs, long-sized shuffles, but an actual collision
-    would merge tokens inside the verify counts, so certified callers
-    must keep ``'auto'``.
+    build time, once per construction) — the same bounded-driver-action
+    budget as the graph module's edge gate.
 
     Float-boundary note (audited r13, after the overlap-bound fix):
     the ceil in the prefix-length formula is SAFE, unlike the removed
@@ -1621,62 +1504,34 @@ def _ordered_prefixes(
     lossless. The removed bound failed in the opposite direction
     because its result was COMPARED AGAINST an integer count, where
     rounding up by one ulp flips the comparison."""
-    if mode not in ("auto", "hashed", "strings"):
-        raise ValueError(
-            f"mode must be 'auto', 'hashed' or 'strings', got {mode!r}"
-        )
     toks = _pin(
         df.select(
             F.col(id_col).alias("__id"),
             F.array_distinct(F.col(set_col)).alias("__s"),
-        ).where(F.size("__s") > 0),
-        persist,
+        ).where(F.size("__s") > 0)
     )
     tok = F.explode("__s").alias("__t")
-    if mode == "strings":
-        # probe-free exact path: the string total order needs no
-        # injectivity evidence, so construction runs ZERO Spark jobs
-        hashed = False
-        tok_stats = None
-    else:
-        # ONE explode pass serves both the injectivity probe and the
-        # df-count: per-hash (document frequency, distinct-token count)
-        # — the probe is then a bounded emptiness action on the pinned
-        # aggregate the df-join reuses, not a second corpus pass (r14).
-        # Pinned UNCONDITIONALLY (r15): the table is VOCABULARY-bounded
-        # — two longs per distinct token, never corpus-scale — and in
-        # the persist=False flow the probe plus the df-count consumer
-        # would otherwise each replay the full tokenizer lineage (the
-        # r14 advice finding).
-        tok_stats = _pin(
-            toks.select(tok)
-            .groupBy(F.xxhash64("__t").alias("__h"))
-            .agg(
-                F.count(F.lit(1)).alias("__df"),
-                F.countDistinct("__t").alias("__nt"),
-            ),
-            True,
+    # ONE explode pass serves both the injectivity probe and the
+    # df-count: per-hash (document frequency, distinct-token count) —
+    # the probe is then a bounded emptiness action on the pinned
+    # aggregate the df-join reuses, not a second corpus pass (r14). The
+    # table is VOCABULARY-bounded: two longs per distinct token, never
+    # corpus-scale.
+    tok_stats = _pin(
+        toks.select(tok)
+        .groupBy(F.xxhash64("__t").alias("__h"))
+        .agg(
+            F.count(F.lit(1)).alias("__df"),
+            F.countDistinct("__t").alias("__nt"),
         )
-        if mode == "hashed":
-            # caller-asserted injectivity: zero construction jobs, but
-            # a real 64-bit collision would MERGE tokens in the verify
-            # counts — exactness is the caller's claim, not checked
-            hashed = True
-        else:
-            memo_key = (
-                tok_stats._jdf.queryExecution().analyzed().semanticHash()
-            )
-            hashed = _INJECTIVITY_MEMO.get(memo_key)
-            if hashed is None:
-                hashed = _hash_injective(tok_stats)
-                _INJECTIVITY_MEMO[memo_key] = hashed
+    )
+    hashed = _hash_injective(tok_stats)
     t = F.xxhash64("__t") if hashed else F.col("__t")
     if hashed:
         tok_df = tok_stats.select(F.col("__h").alias("__t"), "__df")
     else:
-        # collision fallback (and the 'strings' path): document
-        # frequency on the raw token strings (a collided hashed table
-        # would have merged ≥2 tokens)
+        # collision fallback: document frequency on the raw token
+        # strings (a collided hashed table would have merged ≥2 tokens)
         tok_df = (
             toks.select(tok)
             .groupBy("__t")
@@ -1702,8 +1557,7 @@ def _ordered_prefixes(
         with_order.select(
             "__id", "__sorted",
             F.slice("__sorted", 1, prefix_len).alias("__prefix"),
-        ),
-        persist,
+        )
     ), hashed
 
 
@@ -1712,8 +1566,6 @@ def set_similarity_join(
     set_col: str,
     id_col: str,
     threshold: float = 0.6,
-    persist: bool = True,
-    mode: str = "auto",
 ) -> DataFrame:
     """EXACT all-pairs Jaccard join over token SETS via prefix
     filtering (PPJoin family, Xiao et al. WWW'08): provably LOSSLESS,
@@ -1740,15 +1592,11 @@ def set_similarity_join(
     the TRUE answer is O(n²) pairs and no exact algorithm beats
     that — cap the input or raise the threshold there.
 
-    ``mode``: staging selection — 'auto' (probed hashed staging,
-    exact), 'strings' (probe-free, exact, zero construction jobs) or
-    'hashed' (probe-free, trusts xxhash64 injectivity on this corpus);
-    see :func:`_ordered_prefixes`."""
+    The staging probes xxhash64 injectivity on the vocabulary once per
+    call (one bounded action; see :func:`_ordered_prefixes`)."""
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    pref, hashed = _ordered_prefixes(
-        df, set_col, id_col, threshold, persist, mode
-    )
+    pref, hashed = _ordered_prefixes(df, set_col, id_col, threshold)
     # candidates meet on BARE IDS + two ints (set size, prefix token
     # position): dedupe (id_a, id_b) while the rows are narrow, then
     # re-join the pinned per-doc arrays for the verify — shuffling the
@@ -1869,8 +1717,6 @@ def containment_join(
     set_col: str,
     id_col: str,
     threshold: float = 0.9,
-    persist: bool = True,
-    mode: str = "auto",
 ) -> DataFrame:
     """ASYMMETRIC near-subset detection: pairs where
     |A∩B| / |A| ≥ threshold — A's content is (almost) contained in B.
@@ -1884,8 +1730,8 @@ def containment_join(
     candidates meet in an equi-join between A-prefix tokens and B's
     full token index. Exact verify within candidates. Lossless — the
     oracle is the brute-force scan. Output: (id_a, id_b, containment)
-    for a ≠ b, both directions reported independently. ``mode`` as in
-    :func:`set_similarity_join`."""
+    for a ≠ b, both directions reported independently. Staging (and its
+    one eager injectivity probe) as in :func:`set_similarity_join`."""
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     # NOTE: containment's prefix bound is one-sided (|A∩B| >= ⌈t·|A|⌉,
@@ -1896,9 +1742,7 @@ def containment_join(
     # equi-join and the intersect/size verify below are exact on
     # either element type — containment's counts, like Jaccard's,
     # depend only on token identity.
-    pref, _ = _ordered_prefixes(
-        df, set_col, id_col, threshold, persist, mode
-    )
+    pref, _ = _ordered_prefixes(df, set_col, id_col, threshold)
     # same narrow-dedupe-then-fetch shape as set_similarity_join:
     # pair ids meet and dedupe as two longs, arrays re-attach after
     a = pref.select(

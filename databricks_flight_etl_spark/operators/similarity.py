@@ -134,7 +134,6 @@ def cosine_near_dup_pairs(
     vec_col: str = "embedding",
     block_col: str | None = None,
     decimals: int = 6,
-    persist: bool = True,
     salt: int = 1,
 ) -> DataFrame:
     """Embedding near-duplicate pairs: (id_a, id_b, cosine) with
@@ -205,12 +204,11 @@ def cosine_near_dup_pairs(
         )
     else:
         v = v.withColumn("__n", l2_norm(F.col("__v")))
-    if persist:
-        # both self-join sides read v: pin it so the spread exchange,
-        # the banding dots, and the norm compute ONCE
-        from pyspark.storagelevel import StorageLevel
+    from pyspark import StorageLevel
 
-        v = v.persist(StorageLevel.MEMORY_AND_DISK)
+    # both self-join sides read v: pin it so the spread exchange, the
+    # banding dots, and the norm compute ONCE
+    v = v.persist(StorageLevel.MEMORY_AND_DISK)
     a = v.select(
         F.col(id_col).alias("id_a"), F.col("__v").alias("__va"),
         F.col("__n").alias("__na"), "__blk",

@@ -54,7 +54,6 @@ def run_flight_pipeline(
     derive_ts: bool = True,
     ts_col: str = "DepTime_Timestamp",
     output_path: str | None = None,
-    persist: bool = True,
 ) -> QualityReport:
     """Run the full reference pipeline shape over a flight-schema (or
     compatible) DataFrame. Every report is a DataFrame; nothing prints.
@@ -68,8 +67,7 @@ def run_flight_pipeline(
     cleaned, dropped = completeness.drop_allnull_columns(df)
     if derive_ts and "DepTime" in cleaned.columns:
         cleaned = derive_departure_timestamp(cleaned)
-    if persist:
-        cleaned = cleaned.persist(StorageLevel.MEMORY_AND_DISK)
+    cleaned = cleaned.persist(StorageLevel.MEMORY_AND_DISK)
 
     report = QualityReport(
         cleaned=cleaned,
@@ -115,7 +113,7 @@ class TextPrepReport:
     # total_occurrences, pair_mass, bg_jaccard_est, threshold,
     # triggered), captured when the guard actually ran — i.e. near-dup
     # on, no mitigation knob, guard != 'off'. None otherwise. The
-    # funnel just PAID for this two-job measurement; a 100 TB operator
+    # funnel just PAID for this one-action measurement; a 100 TB operator
     # should get the measured J_bg in the job's report, not only as a
     # warning that dies with stderr (round-10 verdict stretch).
     guard_profile: dict | None = None
@@ -145,7 +143,6 @@ def run_textprep_pipeline(
     chunk_tokens: int = 64,
     overlap: int = 16,
     near_dup: bool = True,
-    persist: bool = True,
     hash_family: str = "xxhash64",
     bands: int | None = None,
     url_col: str | None = None,
@@ -206,19 +203,18 @@ def run_textprep_pipeline(
         & (F.col("n_tokens") <= max_tokens)
         & (F.col("stopword_ratio") <= max_stopword_ratio)
     )
-    lang_kept = quality_kept.where(F.col("lang_guess").isin(*langs))
-    if persist:
-        # exact_dedup's survivor semi-join references its input TWICE
-        # (digest-agg side + probe side); unpinned, the whole quality +
-        # lang expression chain re-executes for each — measured 2.4×
-        # the funnel's cold wall-clock at sf0.1. At 100 TB substitute a
-        # parquet checkpoint (module docstring).
-        lang_kept = lang_kept.persist(StorageLevel.MEMORY_AND_DISK)
+    # exact_dedup's survivor semi-join references its input TWICE
+    # (digest-agg side + probe side); unpinned, the whole quality + lang
+    # expression chain re-executes for each — measured 2.4× the funnel's
+    # cold wall-clock at sf0.1. At 100 TB substitute a parquet
+    # checkpoint (module docstring).
+    lang_kept = quality_kept.where(
+        F.col("lang_guess").isin(*langs)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
     exact_unique = dedup.exact_dedup(lang_kept, text_col, id_col)
     if near_dup:
-        if persist:
-            exact_unique = exact_unique.persist(StorageLevel.MEMORY_AND_DISK)
+        exact_unique = exact_unique.persist(StorageLevel.MEMORY_AND_DISK)
         # bands default to the threshold-derived shape (auto_bands):
         # the pipeline takes an arbitrary threshold, and a fixed
         # bands=4 under-recalls below its j~=0.84 midpoint; certified
@@ -229,7 +225,7 @@ def run_textprep_pipeline(
         # common shingle mass
         pairs = dedup.minhash_dedup_pairs(
             exact_unique, text_col, id_col,
-            threshold=near_dup_threshold, shingle_k=shingle_k, persist=persist,
+            threshold=near_dup_threshold, shingle_k=shingle_k,
             hash_family=hash_family,
             bands=bands if bands is not None
             else dedup.auto_bands(32, near_dup_threshold),
@@ -321,20 +317,17 @@ def run_corpus_release(
 
     rep = run_textprep_pipeline(df, text_col, id_col, **textprep_kwargs)
     redacted = text.pii_redact(rep.kept, text_col, id_col)
+    # FOUR consumers read this frame (the packer's two eager actions —
+    # id bounds and per-bucket sums — plus the window input and the
+    # final join-back), and its lineage holds the 6-regex PII pass:
+    # unpinned, that pass re-ran once per consumer (guide §5 — persist
+    # exactly the reused-and-expensive intermediates). At 100 TB
+    # substitute a parquet checkpoint (module docstring).
     with_tokens = redacted.select(
         F.col(id_col),
         "clean",
         F.size(text.tokens(F.col("clean"))).alias("n_tokens"),
-    )
-    if textprep_kwargs.get("persist", True):
-        # FOUR consumers read this frame (the packer's two eager
-        # actions — id bounds and per-bucket sums — plus the window
-        # input and the final join-back), and its lineage holds the
-        # 6-regex PII pass: unpinned, that pass re-ran once per
-        # consumer (guide §5 — persist exactly the reused-and-expensive
-        # intermediates). Same persist knob as the funnel's own pins;
-        # at 100 TB substitute a parquet checkpoint (module docstring).
-        with_tokens = with_tokens.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     packed = pack_by_token_budget(with_tokens, id_col, "n_tokens", budget)
     released = packed.join(
         with_tokens.select(F.col(id_col), "clean"), id_col

@@ -60,38 +60,6 @@ def test_minhash_near_dup(spark, docs):
     assert all(3 not in p for p in got)
 
 
-def test_jaccard_verify_strategies_identical(spark):
-    """r5: the verify stage's two physical strategies — per-pair
-    array_intersect (default; fewest shuffles, the q_textprep_pipeline
-    regression fix) and the inverted 8-byte-hash index (mega-doc
-    regime) — must return IDENTICAL (id_a, id_b, jaccard) rows on a
-    corpus with exact dups, near dups, and non-dups."""
-    base = "the quick brown fox jumps over the lazy dog " * 6
-    rows = [
-        (0, base),
-        (1, base),                                   # exact dup
-        (2, base.replace("lazy", "sleepy")),         # near dup
-        (3, "completely different text about spark physical plans "
-            "and shuffle exchanges, long enough to shingle " * 3),
-        (4, base[:-30]),                             # truncated near dup
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(threshold=0.5, bands=8, shingle_k=7)
-    a = sorted(map(tuple, dedup.minhash_dedup_pairs(
-        df, "text", "doc_id", verify="intersect", **kw).collect()))
-    b = sorted(map(tuple, dedup.minhash_dedup_pairs(
-        df, "text", "doc_id", verify="index", **kw).collect()))
-    assert a == b and len(a) >= 3
-    import pytest
-
-    with pytest.raises(ValueError, match="strategy"):
-        dedup._jaccard_verified(
-            df, "text", "doc_id",
-            spark.createDataFrame([], "id_a long, id_b long"),
-            0.5, 7, strategy="bogus",
-        )
-
-
 def test_simhash_near_dup(spark, docs):
     pairs = dedup.simhash_near_dup_pairs(docs, "text", "doc_id", max_hamming=6)
     got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
@@ -1737,7 +1705,7 @@ def test_set_similarity_join_exact_rational_boundary(spark):
         ordered = [h[t] for t in sorted(s, key=lambda t: (dfreq[t], h[t]))]
         plen = len(ordered) - math.ceil(2 / 3 * len(ordered)) + 1
         expect[rid] = (ordered, ordered[:plen])
-    pref_df, hashed = _ordered_prefixes(df, "s", "id", 2 / 3, False)
+    pref_df, hashed = _ordered_prefixes(df, "s", "id", 2 / 3)
     assert hashed
     pref = {
         r["__id"]: (list(r["__sorted"]), list(r["__prefix"]))
@@ -1769,15 +1737,11 @@ def test_set_similarity_string_fallback_identical(spark, monkeypatch):
 
     def run_both(fn, *args):
         hashed = {tuple(r) for r in fn(df, "s", "id", *args).collect()}
-        # the r15 memo caches the probe's verdict per source plan —
-        # clear it so the forced-collision hook is actually consulted
-        dedup._INJECTIVITY_MEMO.clear()
         monkeypatch.setattr(dedup, "_hash_injective", lambda toks: False)
         try:
             fell_back = {tuple(r) for r in fn(df, "s", "id", *args).collect()}
         finally:
             monkeypatch.undo()
-            dedup._INJECTIVITY_MEMO.clear()
         return hashed, fell_back
 
     h, s = run_both(dedup.set_similarity_join, 0.6)
@@ -1785,9 +1749,8 @@ def test_set_similarity_string_fallback_identical(spark, monkeypatch):
     h, s = run_both(dedup.containment_join, 0.8)
     assert h == s and h
     # the fallback staging really does hold strings
-    dedup._INJECTIVITY_MEMO.clear()
     monkeypatch.setattr(dedup, "_hash_injective", lambda toks: False)
-    pref, hashed = dedup._ordered_prefixes(df, "s", "id", 0.6, False)
+    pref, hashed = dedup._ordered_prefixes(df, "s", "id", 0.6)
     assert not hashed
     assert isinstance(pref.first()["__sorted"][0], str)
 

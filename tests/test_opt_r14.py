@@ -26,27 +26,30 @@ def docs(spark):
 
 
 def test_guard_profile_identical_pinned_vs_unpinned(spark, docs):
-    """The merged one-action guard (doc count riding the distribution
-    aggregate, read from the staged arrays when pinned) must measure
-    exactly what the two-job form measured — same n_docs, same sums,
-    same estimate — in BOTH the pinned (arrs-count) and unpinned
-    (raw-scan-count) paths."""
-    profiles = {}
-    for persist in (True, False):
-        dedup.minhash_dedup_pairs(
-            docs, "text", "doc_id", shingle_k=5, persist=persist,
-            guard="warn",
-        )
-        profiles[persist] = dedup.last_guard_profile()
-        spark.catalog.clearCache()
-    a, b = profiles[True], profiles[False]
+    """The merged one-action guard reads the pinned staging (doc count
+    from the staged arrays, df distribution from their explode). It
+    must measure exactly what the unpinned raw-scan shingle table
+    gives — same n_docs, same sums, same estimate."""
+    dedup.minhash_dedup_pairs(
+        docs, "text", "doc_id", shingle_k=5, guard="warn",
+    )
+    got = dedup.last_guard_profile()
+    spark.catalog.clearCache()
+    dfs = [r["df"] for r in dedup.shingle_stop_list(
+        docs, "text", "doc_id", shingle_k=5, max_df=0,
+    ).collect()]
+    n = docs.where(F.col("text").isNotNull()).count()
+    occ = sum(dfs)
+    pair_mass = sum(d * (d - 1) for d in dfs)
+    e_shared = float(pair_mass) / (n * (n - 1))
+    e_size = float(occ) / n
     # n_docs = non-null-text docs (41 here: 40 lorem + 'tiny'; the
-    # null-text row must NOT count) — the staged-arrays count and the
-    # pruned raw-scan count must agree exactly
-    assert a["n_docs"] == b["n_docs"] == 41
-    for key in ("total_occurrences", "pair_mass", "bg_jaccard_est",
-                "triggered"):
-        assert a[key] == b[key], key
+    # null-text row must NOT count)
+    assert got["n_docs"] == n == 41
+    assert got["total_occurrences"] == occ
+    assert got["pair_mass"] == pair_mass
+    assert got["bg_jaccard_est"] == e_shared / (2.0 * e_size - e_shared)
+    assert got["triggered"] == (got["bg_jaccard_est"] > got["threshold"])
 
 
 def test_union_find_stashes_exact_drop_count(spark):

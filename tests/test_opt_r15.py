@@ -13,7 +13,6 @@ from __future__ import annotations
 import uuid
 
 import pyspark.sql.functions as F
-import pytest
 
 from databricks_flight_etl_spark import partitioning
 
@@ -67,71 +66,42 @@ def test_spread_runs_zero_jobs_on_exchange_bearing_plans(spark, tmp_path):
     assert n == 0
 
 
-def test_ppjoin_modes_agree_and_skip_the_probe(spark, tmp_path):
-    """'strings' and 'hashed' staging must produce the same pairs as
-    the probed 'auto' path on a collision-free corpus, and both
-    probe-free modes must run ZERO jobs at construction time."""
+def test_ppjoin_injectivity_probe_reruns_after_overwrite(
+    spark, tmp_path, monkeypatch
+):
+    """Every construction probes injectivity on the data it is given.
+    Overwriting the source path and re-reading it yields a plan that
+    looks the same as the first one; a verdict cached per plan would
+    be stale for the new tokens, so the probe must run again."""
     from databricks_flight_etl_spark.operators import dedup
 
-    path = str(tmp_path / "sets.parquet")
-    rows = [
-        (i, [f"tok{i % 9}_{j}" for j in range(6)] + ["shared"])
-        for i in range(30)
-    ]
-    spark.createDataFrame(rows, "doc_id long, toks array<string>").write.parquet(path)
-    df = spark.read.parquet(path)
+    calls = []
+    probe = dedup._hash_injective
 
-    def pairs(mode):
+    def counting(tok_stats):
+        calls.append(1)
+        return probe(tok_stats)
+
+    monkeypatch.setattr(dedup, "_hash_injective", counting)
+    path = str(tmp_path / "sets.parquet")
+
+    def build(prefix):
+        spark.createDataFrame(
+            [(i, [f"{prefix}{i % 5}_{j}" for j in range(4)])
+             for i in range(20)],
+            "doc_id long, toks array<string>",
+        ).write.mode("overwrite").parquet(path)
         out = dedup.set_similarity_join(
-            df, "toks", "doc_id", threshold=0.6, mode=mode
+            spark.read.parquet(path), "toks", "doc_id", threshold=0.7
         )
-        got = sorted(
-            (r["id_a"], r["id_b"], r["jaccard"]) for r in out.collect()
-        )
+        got = sorted((r["id_a"], r["id_b"]) for r in out.collect())
         spark.catalog.clearCache()
         return got
 
-    auto = pairs("auto")
-    assert auto  # the corpus must actually produce pairs
-    assert pairs("strings") == auto
-    assert pairs("hashed") == auto
-    # probe-free construction: zero jobs
-    for mode in ("strings", "hashed"):
-        n = _jobs_run_during(
-            spark,
-            lambda: dedup.set_similarity_join(
-                df, "toks", "doc_id", threshold=0.6, mode=mode
-            ),
-        )
-        assert n == 0, mode
-        spark.catalog.clearCache()
-    with pytest.raises(ValueError):
-        dedup.set_similarity_join(df, "toks", "doc_id", mode="bogus")
-
-
-def test_ppjoin_injectivity_probe_memoized(spark, tmp_path):
-    """Re-constructing the join over the same source plan must reuse
-    the probe's verdict (zero jobs) — plan audits construct every
-    registry query and previously paid the probe each time."""
-    from databricks_flight_etl_spark.operators import dedup
-
-    path = str(tmp_path / "sets2.parquet")
-    spark.createDataFrame(
-        [(i, [f"w{i}_{j}" for j in range(4)]) for i in range(20)],
-        "doc_id long, toks array<string>",
-    ).write.parquet(path)
-    df = spark.read.parquet(path)
-    dedup.set_similarity_join(df, "toks", "doc_id", threshold=0.7)
-    spark.catalog.clearCache()
-    df2 = spark.read.parquet(path)  # fresh read, same source plan
-    n = _jobs_run_during(
-        spark,
-        lambda: dedup.set_similarity_join(
-            df2, "toks", "doc_id", threshold=0.7
-        ),
-    )
-    assert n == 0
-    spark.catalog.clearCache()
+    first = build("w")
+    second = build("v")
+    assert len(calls) == 2
+    assert first == second and first  # same shape, fresh tokens
 
 
 def test_spread_estimate_formula_scale_adaptive(spark, monkeypatch):

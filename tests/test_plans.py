@@ -194,7 +194,6 @@ def test_textprep_pipeline_verify_stage_shape(spark):
     docs = sources.load_table(spark, SF, "documents")
     pairs = dedup.minhash_dedup_pairs(
         docs, "text", "doc_id", threshold=0.8, bands=8, shingle_k=7,
-        persist=False,
     )
     p = plans.explain_str(pairs)
     assert "array_intersect" in p, "verify lost the intersect strategy"

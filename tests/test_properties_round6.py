@@ -54,7 +54,7 @@ def test_hist_cumsum_matches_python_reference(
     by = ["g"] if grouped else []
     out = _hist_cumsum(
         df, "v", ["c1", "c2"], by=by, n_buckets=n_buckets,
-        inclusive=inclusive, persist=False,
+        inclusive=inclusive,
     )
     got = {
         (r["g"] if grouped else "_", r["v"]):

@@ -152,7 +152,7 @@ def test_hist_cumsum_bucket_on_string_values(spark):
         want[v] = run
     for nb in (1, 2, 5, 64):
         out = _hist_cumsum(
-            df, "v", ["c"], bucket_on=proxy, n_buckets=nb, persist=False
+            df, "v", ["c"], bucket_on=proxy, n_buckets=nb
         )
         got = {r["v"]: r["__cum_c"] for r in out.collect()}
         assert got == want, nb

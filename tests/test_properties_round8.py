@@ -304,11 +304,10 @@ def test_minhash_max_df_collapses_boilerplate_buckets(spark):
     assert stops.count() > 50  # the boilerplate's shingles
 
     cand_raw = minhash_candidate_pairs(
-        df, "text", "doc_id", shingle_k=7, persist=False
+        df, "text", "doc_id", shingle_k=7
     ).count()
     cand_filtered = minhash_candidate_pairs(
-        df, "text", "doc_id", shingle_k=7, persist=False,
-        stops=stops,
+        df, "text", "doc_id", shingle_k=7, stops=stops,
     ).count()
     assert cand_filtered < cand_raw  # the collapse
     assert cand_filtered >= 1        # the planted pair survives
@@ -484,23 +483,47 @@ def test_shingle_profile_flags_boilerplate(spark):
 def test_lambda_filter_tripwire(spark):
     """plans.lambda_filters flags Catalyst re-running a computed-array
     expression inside an inferred filter. Positive control: the
-    stop-shingle verify WITHOUT the cache boundary (persist=False)
-    carries the pathological plan; with the pin (persist=True) the
-    inferred filters land on the InMemoryRelation and the count is 0."""
+    stop-shingle verify's explode → anti-join built WITHOUT the cache
+    boundary carries the pathological plan; _jaccard_verified pins
+    before the explode, so its inferred filters land on the
+    InMemoryRelation and the count is 0."""
     from databricks_flight_etl_spark import plans
     from databricks_flight_etl_spark.operators.dedup import (
-        _jaccard_verified, shingle_stop_list,
+        _jaccard_verified, _shingle_arrays_pre, shingle_stop_list,
     )
 
     df = _boiler_corpus(spark, n=20)
     stops = shingle_stop_list(df, "text", "doc_id", shingle_k=7,
                               max_df=10)
     pairs = spark.createDataFrame([(20, 21)], "id_a long, id_b long")
-    slow = _jaccard_verified(df, "text", "doc_id", pairs, 0.8, 7,
-                             persist=False, stops=stops)
+    ids = pairs.select(F.col("id_a").alias("__id")).unionByName(
+        pairs.select(F.col("id_b").alias("__id"))
+    )
+    docs = df.select(
+        F.col("doc_id").alias("__id"), F.col("text").alias("__raw")
+    ).join(ids, "__id", "left_semi")
+    arrs = (
+        _shingle_arrays_pre(docs, 7)
+        .select("__id", F.explode("__shs").alias("__sh"))
+        .join(stops.select(F.col("shingle").alias("__sh")), "__sh",
+              "left_anti")
+        .groupBy("__id")
+        .agg(F.collect_list("__sh").alias("__shs"))
+    )
+    a = arrs.select(F.col("__id").alias("id_a"),
+                    F.col("__shs").alias("__sa"))
+    b = arrs.select(F.col("__id").alias("id_b"),
+                    F.col("__shs").alias("__sb"))
+    shared = F.size(F.array_intersect("__sa", "__sb"))
+    jac = shared / (F.size("__sa") + F.size("__sb") - shared)
+    slow = (
+        pairs.join(a, "id_a").join(b, "id_b")
+        .where(jac >= 0.8)
+        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    )
     assert plans.lambda_filters(slow) > 0  # the pathology, visible
     fast = _jaccard_verified(df, "text", "doc_id", pairs, 0.8, 7,
-                             persist=True, stops=stops)
+                             stops=stops)
     assert plans.lambda_filters(fast) == 0  # pinned boundary absorbs it
     # both shapes produce identical answers
     a = sorted(map(tuple, slow.collect()))
@@ -561,12 +584,10 @@ def test_max_df_results_unchanged_by_shared_table(spark):
     )
     assert (25, 26) in {(a, b) for a, b, _ in mh}
     cands_shared = minhash_candidate_pairs(
-        df, "text", "doc_id", shingle_k=7, persist=False,
-        stops=stops_own, table=st,
+        df, "text", "doc_id", shingle_k=7, stops=stops_own, table=st,
     )
     cands_own = minhash_candidate_pairs(
-        df, "text", "doc_id", shingle_k=7, persist=False,
-        stops=stops_own,
+        df, "text", "doc_id", shingle_k=7, stops=stops_own,
     )
     assert sorted(map(tuple, cands_shared.collect())) == sorted(
         map(tuple, cands_own.collect())
@@ -575,29 +596,3 @@ def test_max_df_results_unchanged_by_shared_table(spark):
         df, "text", "doc_id", max_hamming=3, shingle_k=7, max_df=12
     )
     assert (25, 26) in {(r.id_a, r.id_b) for r in sh.collect()}
-
-
-def test_max_df_verify_strategies_agree(spark):
-    """The two exact-Jaccard verify strategies must stay bit-identical
-    under the stop-shingle filter too — both consume the same FILTERED
-    shingle sets."""
-    from databricks_flight_etl_spark.operators.dedup import (
-        minhash_dedup_pairs,
-    )
-
-    df = _boiler_corpus(spark, n=25)
-    a = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_dedup_pairs(
-            df, "text", "doc_id", threshold=0.8, shingle_k=7,
-            max_df=12, verify="intersect",
-        ).collect()
-    )
-    b = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_dedup_pairs(
-            df, "text", "doc_id", threshold=0.8, shingle_k=7,
-            max_df=12, verify="index",
-        ).collect()
-    )
-    assert a == b and (25, 26) in {(x, y) for x, y, _ in a}

@@ -484,6 +484,37 @@ def test_stratified_sample_n_balanced(spark):
            {r["id"] for r in again.collect()}
 
 
+def test_chi_square_dof_counts_null_category(spark):
+    """A NULL category is a level of its variable: dof counts it, as
+    the DuckDB oracle's ``(SELECT count(*) FROM ra) - 1`` form does
+    over the same rows. Its cells drop out of the chi2 sum on both
+    engines (their equi-joins skip null keys)."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entrymod
+    from databricks_flight_etl_spark.operators.accuracy import (
+        chi_square_independence,
+    )
+
+    kinds = ["click", "view", "buy", None]
+    rows = [(kinds[(i * 7) % 4 if i % 5 else 3], i * 13 % 29)
+            for i in range(60)]
+    ev = spark.createDataFrame(rows, "event_type string, user_id long")
+    got = chi_square_independence(
+        ev.withColumn("bucket", (F.col("user_id") % 3).cast("int")),
+        "event_type", "bucket",
+    ).collect()[0]
+    con = duckdb.connect()
+    con.register(
+        "events", pd.DataFrame(rows, columns=["event_type", "user_id"])
+    )
+    want = con.execute(entrymod.oracle_sql()["q_chi_square"]).fetchone()
+    assert got["dof"] == want[1] == (4 - 1) * (3 - 1)
+    assert got["n"] == want[2]
+    assert got["chi2"] == pytest.approx(want[0], abs=1e-6)
+
+
 def test_statistics_trio_against_scipy_free_references(spark):
     """Welch t / chi-square / Spearman checked against hand-computed
     references on small inputs (no scipy in-container)."""
