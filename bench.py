@@ -198,7 +198,7 @@ def main() -> None:
             else:
                 runs.append(time.time() - t0)
             finally:
-                # operators pin shared intermediates (operators.dedup._pin);
+                # operators pin shared intermediates (session.pin);
                 # caches are per-query — drop so a 100+-query run stays flat
                 try:
                     spark.catalog.clearCache()

@@ -11,11 +11,11 @@ groupBy — two passes total, no driver bulk transfer, works at 100 TB.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import pin
 
 __all__ = ["summary_stats", "histogram", "describe",
            "moving_average", "zscore_by_group",
@@ -27,7 +27,7 @@ __all__ = ["summary_stats", "histogram", "describe",
            "psi_drift", "trimmed_mean_by_group", "winsorized_mean_by_group",
            "group_linear_trend", "benford_profile", "grouped_pearson",
            "ks_statistic", "ks_statistic_grouped", "ks_drift_report",
-           "mad_grouped", "release_histogram_caches"]
+           "mad_grouped"]
 
 
 def describe(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -163,61 +163,6 @@ def histogram(df: DataFrame, col: str, nbins: int = 20) -> DataFrame:
     )
 
 
-_PINNED_HISTS: list[DataFrame] = []
-_PINNED_LOCK = threading.Lock()
-# FIFO cap on the registry: MEMORY_AND_DISK blocks' MEMORY half is
-# LRU-evictable but the DISK half is NOT — a long-lived session that
-# never calls release_histogram_caches() would otherwise accumulate
-# disk blocks without bound. Evicting (unpersisting) an old pin is
-# always correctness-safe: any still-lazy result that referenced it
-# just recomputes its lineage (slower, never wrong).
-_MAX_PINNED = 32
-
-
-def _register_pin(hist: DataFrame) -> None:
-    evicted = None
-    with _PINNED_LOCK:
-        _PINNED_HISTS.append(hist)
-        if len(_PINNED_HISTS) > _MAX_PINNED:
-            evicted = _PINNED_HISTS.pop(0)
-    if evicted is not None:
-        try:
-            evicted.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing left to free
-
-
-def release_histogram_caches() -> int:
-    """Unpersist every histogram :func:`_hist_cumsum` has pinned this
-    session and return how many were released.
-
-    ``_hist_cumsum`` persists its input histogram (three internal
-    consumers — see its docstring) but returns a LAZY frame, so neither
-    it nor its callers (ks_statistic, quantiles_exact, grouped_quantiles,
-    rank_normalize, spearman_corr, ks_drift_report, vocab_coverage) can
-    unpersist before the caller's eventual action. Batch jobs release
-    everything at session end; a LONG-LIVED session running repeated
-    drift checks should call this between checks. The registry is
-    lock-guarded (safe under concurrent jobs) and FIFO-capped at
-    ``_MAX_PINNED`` so a session that never releases cannot grow its
-    on-disk block store without bound (MEMORY_AND_DISK's disk half is
-    not LRU-evicted). Releasing — explicitly here or via the cap — is
-    always safe for CORRECTNESS: a lazy result whose pinned input was
-    unpersisted silently recomputes that lineage from source on its
-    next action (a recompute cost, never a wrong answer). Unpersist is
-    idempotent and non-blocking.
-    """
-    with _PINNED_LOCK:
-        drained = list(_PINNED_HISTS)
-        _PINNED_HISTS.clear()
-    for h in drained:
-        try:
-            h.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing left to free
-    return len(drained)
-
-
 def _hist_cumsum(
     hist: DataFrame, value_col: str, sum_cols: list[str],
     by: list[str] | None = None, n_buckets: int = 64,
@@ -247,8 +192,8 @@ def _hist_cumsum(
     The histogram is always pinned (MEMORY_AND_DISK): three consumers
     (bucket sums, the window join, callers' totals) would otherwise
     each re-execute the lineage back to the raw scan — the plan audit
-    showed 8 source scans on the unpinned KS form. Every pin is
-    registered so :func:`release_histogram_caches` can free them (the
+    showed 8 source scans on the unpinned KS form. The pin goes through
+    :func:`session.pin`, so :func:`session.release_pins` frees it (the
     returned frame is lazy, so neither this function nor its callers
     can unpersist before the caller's action).
 
@@ -266,11 +211,8 @@ def _hist_cumsum(
     test_ks_statistic_bucket_count_invariant)."""
     from pyspark.sql import Window
 
-    from pyspark import StorageLevel
-
     by = list(by or [])
-    hist = hist.persist(StorageLevel.MEMORY_AND_DISK)
-    _register_pin(hist)
+    hist = pin(hist)
     vd = (
         F.col(value_col).cast("double")
         if bucket_on is None

@@ -18,21 +18,9 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..partitioning import spread
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Persist a subplan that downstream code references more than once.
-
-    Without this, every reference to a self-joined side re-executes the
-    whole lineage back to the source scan (a plan audit showed the
-    banded-LSH join reading the corpus 76×). MEMORY_AND_DISK spills
-    instead of failing; callers running many one-shot jobs can
-    ``spark.catalog.clearCache()`` between them, and long-lived 100 TB
-    pipelines should checkpoint these tables to parquet instead."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+from ..session import pin
 
 __all__ = [
     "normalize_text",
@@ -179,7 +167,7 @@ def _staged_shingles(
     Memory note: the ARRAY form is what gets pinned — one row per doc
     is strictly smaller than the exploded (id, shingle) table, which
     repeats the id per shingle."""
-    arrs = _pin(_shingle_arrays(df, text_col, id_col, k))
+    arrs = pin(_shingle_arrays(df, text_col, id_col, k))
     st = arrs.select("__id", F.explode("__shs").alias("__sh"))
     return arrs, st
 
@@ -321,8 +309,7 @@ def last_guard_profile() -> dict | None:
 
 def _bg_jaccard_guard(
     st: DataFrame, arrs: DataFrame,
-    guard: str, threshold: float = BG_JACCARD_GUARD,
-    caller: str = "LSH",
+    guard: str, caller: str = "LSH",
 ) -> None:
     """Default-on pre-flight entropy guard for the LSH entry points:
     computes the sums-only core of :func:`shingle_df_profile` (the
@@ -382,7 +369,7 @@ def _bg_jaccard_guard(
         "pair_mass": (None if row["pair_mass"] is None
                       else int(row["pair_mass"])),
         "bg_jaccard_est": None,
-        "threshold": threshold,
+        "threshold": BG_JACCARD_GUARD,
         "triggered": False,
     }
     _LAST_GUARD_PROFILE = profile
@@ -395,12 +382,13 @@ def _bg_jaccard_guard(
         return
     j_bg = e_shared / denom
     profile["bg_jaccard_est"] = j_bg
-    if j_bg <= threshold:
+    if j_bg <= BG_JACCARD_GUARD:
         return
     profile["triggered"] = True
     msg = (
         f"{caller} pre-flight guard: measured bg_jaccard_est="
-        f"{j_bg:.4f} exceeds {threshold} on this corpus (n_docs={n}) — "
+        f"{j_bg:.4f} exceeds {BG_JACCARD_GUARD} on this corpus "
+        f"(n_docs={n}) — "
         f"banded candidate generation is likely to go quadratic "
         f"(|bucket|^2 self-join; round-8 probe measured 2e8 candidates "
         f"/ 50+ GB verify shuffle at J_bg~0.1). Pass max_df or "
@@ -507,7 +495,7 @@ def shingle_df_profile(
     :func:`shingle_stop_list`."""
     from .accuracy import quantiles_exact
 
-    dfreq = _pin(
+    dfreq = pin(
         shingle_stop_list(df, text_col, id_col, shingle_k, max_df=0,
                           table=table)
     )  # max_df=0 → every shingle with its df
@@ -760,7 +748,7 @@ def minhash_probe(
     :func:`shingle_stop_list` output next to the index; recomputing it
     from a different corpus snapshot silently changes the geometry).
     """
-    new_bands = _pin(
+    new_bands = pin(
         minhash_bands(
             new_df, text_col, id_col, num_perm, bands, shingle_k,
             hash_family, stops=stops,
@@ -769,7 +757,7 @@ def minhash_probe(
     idx = index_bands.select(
         F.col(id_col).alias("id_b"), "band", "band_hash"
     )
-    cands = _pin(
+    cands = pin(
         new_bands.join(idx, ["band", "band_hash"])
         .where(F.col("id_a") != F.col("id_b"))
         .select("id_a", "id_b")
@@ -830,7 +818,7 @@ def minhash_candidate_pairs(
     corpora with high background similarity). Use more bands only when
     hunting lower-similarity pairs, and expect more candidates.
     """
-    long = _pin(
+    long = pin(
         minhash_bands(
             df, text_col, id_col, num_perm, bands, shingle_k, hash_family,
             stops=stops, table=table,
@@ -930,7 +918,7 @@ def _jaccard_verified(
         # boundary makes those inferred filters cheap array ops on the
         # cached rows instead.
         arrs = (
-            _pin(arrs)
+            pin(arrs)
             .select("__id", F.explode("__shs").alias("__sh"))
             .join(
                 stops.select(F.col("shingle").alias("__sh")), "__sh",
@@ -939,7 +927,7 @@ def _jaccard_verified(
             .groupBy("__id")
             .agg(F.collect_list("__sh").alias("__shs"))
         )
-    arrs = _pin(arrs)
+    arrs = pin(arrs)
     a = arrs.select(
         F.col("__id").alias("id_a"), F.col("__shs").alias("__sa")
     )
@@ -972,7 +960,6 @@ def minhash_dedup_pairs(
     max_df_frac: float | None = None,
     stops: DataFrame | None = None,
     guard: str = "warn",
-    guard_threshold: float = BG_JACCARD_GUARD,
     output: str = "pairs",
 ) -> DataFrame:
     """Near-duplicate pairs: MinHash-LSH candidates → exact Jaccard ≥
@@ -987,7 +974,7 @@ def minhash_dedup_pairs(
     The multiply-referenced intermediates (staged shingles, banded
     signatures, candidate pairs, verify shingles) are always pinned so
     each is computed once instead of once per plan reference — see
-    ``_pin`` and :func:`_staged_shingles`.
+    ``session.pin`` and :func:`_staged_shingles`.
 
     ``hash_family='md5'`` makes every stage engine-portable (see
     ``_base_hash``) at ~md5-vs-xxhash64 cost — the certification
@@ -1020,7 +1007,7 @@ def minhash_dedup_pairs(
     ``guard`` ('warn' default | 'raise' | 'off'): when NO stop-shingle
     mitigation is requested, a cheap pre-flight aggregate estimates
     the corpus' background Jaccard and warns (or raises) above
-    ``guard_threshold`` — see :func:`_bg_jaccard_guard` for why this
+    ``BG_JACCARD_GUARD`` — see :func:`_bg_jaccard_guard` for why this
     is default-on and the note on eagerness. Mitigated calls skip it.
 
     ``output`` ('pairs' default | 'clusters'): 'clusters' feeds the
@@ -1063,7 +1050,7 @@ def minhash_dedup_pairs(
         stops = stops.select("shingle")  # caller-supplied, never cached
     elif max_df is not None:
         # the document-frequency pass reads the shared staging
-        stops = _pin(
+        stops = pin(
             shingle_stop_list(df, text_col, id_col, shingle_k, max_df,
                               table=st)
         )
@@ -1072,10 +1059,9 @@ def minhash_dedup_pairs(
         # materialized by this eager collect and then reused by the
         # signature + verify passes)
         _bg_jaccard_guard(
-            st, arrs, guard, guard_threshold,
-            caller="minhash_dedup_pairs",
+            st, arrs, guard, caller="minhash_dedup_pairs",
         )
-    cands = _pin(
+    cands = pin(
         minhash_candidate_pairs(
             df, text_col, id_col, num_perm, bands, shingle_k,
             hash_family, stops=stops, table=st,
@@ -1177,7 +1163,6 @@ def simhash_near_dup_pairs(
     max_df_frac: float | None = None,
     stops: DataFrame | None = None,
     guard: str = "warn",
-    guard_threshold: float = BG_JACCARD_GUARD,
     output: str = "pairs",
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ max_hamming.
@@ -1226,7 +1211,7 @@ def simhash_near_dup_pairs(
         # one shared shingle pass for both the df pass and the
         # signature sums (see minhash_dedup_pairs / _staged_shingles)
         _, st = _staged_shingles(df, text_col, id_col, shingle_k)
-        stops = _pin(
+        stops = pin(
             shingle_stop_list(df, text_col, id_col, shingle_k, max_df,
                               table=st)
         )
@@ -1235,8 +1220,7 @@ def simhash_near_dup_pairs(
         # rationale on minhash_dedup_pairs
         arrs, st = _staged_shingles(df, text_col, id_col, shingle_k)
         _bg_jaccard_guard(
-            st, arrs, guard, guard_threshold,
-            caller="simhash_near_dup_pairs",
+            st, arrs, guard, caller="simhash_near_dup_pairs",
         )
     sig = simhash64(df, text_col, id_col, shingle_k, hash_family,
                     stops=stops, table=st)
@@ -1285,7 +1269,7 @@ def hamming_near_dup_pairs(
     stack = "stack({n}, {args}) as (chunk_idx, chunk_val)".format(
         n=nchunks, args=", ".join(f"{i}, c_{i}" for i in range(nchunks))
     )
-    long = _pin(wide.select("__id", "__sig", F.expr(stack)))
+    long = pin(wide.select("__id", "__sig", F.expr(stack)))
     a = long.select(
         F.col("__id").alias("id_a"), F.col("__sig").alias("sh_a"),
         "chunk_idx", "chunk_val",
@@ -1361,7 +1345,7 @@ def ngram_jaccard_pairs(
             .select("__sh")
         )
         sh = sh.join(rare, "__sh", "left_semi")
-    sh = _pin(sh)  # referenced by sizes + both join sides
+    sh = pin(sh)  # referenced by sizes + both join sides
     sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz"))
     a = sh.select(F.col("__id").alias("id_a"), "__sh")
     b = sh.select(F.col("__id").alias("id_b"), "__sh")
@@ -1504,7 +1488,7 @@ def _ordered_prefixes(
     lossless. The removed bound failed in the opposite direction
     because its result was COMPARED AGAINST an integer count, where
     rounding up by one ulp flips the comparison."""
-    toks = _pin(
+    toks = pin(
         df.select(
             F.col(id_col).alias("__id"),
             F.array_distinct(F.col(set_col)).alias("__s"),
@@ -1517,7 +1501,7 @@ def _ordered_prefixes(
     # aggregate the df-join reuses, not a second corpus pass (r14). The
     # table is VOCABULARY-bounded: two longs per distinct token, never
     # corpus-scale.
-    tok_stats = _pin(
+    tok_stats = pin(
         toks.select(tok)
         .groupBy(F.xxhash64("__t").alias("__h"))
         .agg(
@@ -1553,7 +1537,7 @@ def _ordered_prefixes(
     )
     sz = F.size("__sorted")
     prefix_len = sz - F.ceil(F.lit(threshold) * sz).cast("int") + 1
-    return _pin(
+    return pin(
         with_order.select(
             "__id", "__sorted",
             F.slice("__sorted", 1, prefix_len).alias("__prefix"),

@@ -64,6 +64,17 @@ def connected_components(
     ``driver_max_edges=0`` to force the distributed loop (the tests'
     convergence/round-count assertions do).
     """
+    return _components(edges, src, dst, max_iter, driver_max_edges)[0]
+
+
+def _components(
+    edges: DataFrame, src: str = "id_a", dst: str = "id_b",
+    max_iter: int = 64, driver_max_edges: int = 1_000_000,
+) -> tuple[DataFrame, int | None]:
+    """:func:`connected_components` plus the number of non-representative
+    nodes (node != component) when the driver union-find computed it,
+    else None — dedup_survivors' broadcast-size gate then skips its
+    count() job (one fewer eager action per survivor selection)."""
     # Materialize the PROJECTED edge list once on entry: this function
     # consumes its input with at least two actions (the combined
     # probe+collect, then — above the bound — the doubled-distinct
@@ -120,16 +131,19 @@ def connected_components(
         changed = new_labels.where(F.col("__chg")).count()
         labels = new_labels.drop("__chg")
         if changed == 0:
-            return labels
+            return labels, None
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
     )
 
 
-def _cc_driver_union_find(collected_rows, e: DataFrame) -> DataFrame:
+def _cc_driver_union_find(
+    collected_rows, e: DataFrame
+) -> tuple[DataFrame, int]:
     """Union-find over an already-collected (bounded) edge list; same
     output contract as the distributed loop: component id = min node
-    id. ``e`` supplies the session and the (a, b) schema only."""
+    id, plus the non-representative count the labeling already knows.
+    ``e`` supplies the session and the (a, b) schema only."""
     parent: dict = {}
 
     def find(x):
@@ -160,15 +174,7 @@ def _cc_driver_union_find(collected_rows, e: DataFrame) -> DataFrame:
     # (≤2M rows) keep enough slices for parallel consumption
     from ..partitioning import local_df
 
-    out = local_df(spark, rows, schema)
-    # the labeling was computed driver-side, so its non-representative
-    # count is already known — stash it on the frame so dedup_survivors'
-    # broadcast-size gate can skip its count() job (one fewer eager
-    # action per survivor selection; guide §1.2 step 1). Advisory only:
-    # any transformation drops the attribute and callers fall back to
-    # counting.
-    out._cc_n_drop = sum(1 for n, c in rows if n != c)
-    return out
+    return local_df(spark, rows, schema), sum(1 for n, c in rows if n != c)
 
 
 def dedup_survivors(
@@ -188,14 +194,13 @@ def dedup_survivors(
     labels are already localCheckpoint-materialized); above the gate,
     AQE still picks broadcast at runtime if stats allow.
     """
-    cc = connected_components(pairs, src, dst)
+    cc, n_drop = _components(pairs, src, dst)
     drop = cc.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
     # the driver union-find fast path already knows the drop-list size —
     # reuse it instead of paying a count() job for the gate (the gate's
     # semantics are unchanged: same number, computed on the driver)
-    n_drop = getattr(cc, "_cc_n_drop", None)
     if broadcast_max_rows and (
         n_drop if n_drop is not None else drop.count()
     ) <= broadcast_max_rows:
@@ -227,7 +232,7 @@ def dedup_survivors_by(
     """
     from pyspark.sql import Window
 
-    cc = connected_components(pairs, src, dst)  # (node, component)
+    cc, n_drop = _components(pairs, src, dst)  # (node, component)
     members = cc.select(F.col("node").alias(id_col), "component")
     scored = members.join(
         df.select(F.col(id_col), F.col(score_col).alias("__score")),
@@ -243,9 +248,8 @@ def dedup_survivors_by(
     )
     # row_number keeps exactly one member per component, so the drop
     # count equals (#nodes − #components) — the same number the driver
-    # union-find fast path stashed as _cc_n_drop (node != component also
-    # holds once per non-representative member). Reuse it for the gate.
-    n_drop = getattr(cc, "_cc_n_drop", None)
+    # union-find fast path returns (node != component also holds once
+    # per non-representative member). Reuse it for the gate.
     if broadcast_max_rows and (
         n_drop if n_drop is not None else drop.count()
     ) <= broadcast_max_rows:

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..partitioning import spread
+from ..session import pin
 
 __all__ = ["dot", "l2_norm", "cosine", "cosine_topk", "cosine_topk_batch",
            "cosine_topk_pandas",
@@ -204,11 +205,9 @@ def cosine_near_dup_pairs(
         )
     else:
         v = v.withColumn("__n", l2_norm(F.col("__v")))
-    from pyspark import StorageLevel
-
     # both self-join sides read v: pin it so the spread exchange, the
     # banding dots, and the norm compute ONCE
-    v = v.persist(StorageLevel.MEMORY_AND_DISK)
+    v = pin(v)
     a = v.select(
         F.col(id_col).alias("id_a"), F.col("__v").alias("__va"),
         F.col("__n").alias("__na"), "__blk",
@@ -547,17 +546,16 @@ def ann_topk_ivf(
     stored partition column — per-query work is just the pruned scan.)
 
     ``checkpoint=False`` returns the lazy plan and leaves the pruned
-    cache pinned (plan-audit path); see :func:`ann_topk_ivf_batch`."""
-    from pyspark import StorageLevel
-
+    cache pinned until :func:`session.release_pins` (plan-audit path);
+    see :func:`ann_topk_ivf_batch`."""
     # prune to (id, vec) ONCE (nulls out — np.asarray(None) isn't
     # stackable in the Arrow Lloyd kernel, and a null vector can't be a
     # neighbor anyway); the Lloyd rounds and the final index assignment
     # all re-execute down to this cache, not the source scan
-    pruned = spread(
+    pruned = pin(spread(
         df.where(F.col(vec_col).isNotNull())
         .select(F.col(id_col), _as_double(vec_col).alias("__v"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     try:
         cents = _ivf_fit(pruned, id_col, n_lists, iters)
         probe_row = (
@@ -713,11 +711,10 @@ def ann_topk_ivf_batch(
     prunable scan of the union of the probes' lists.
 
     ``checkpoint=False`` returns the LAZY plan (same physical shape,
-    nothing materialized) and leaves the pruned corpus cache pinned for
-    the caller to free — the plan-audit/debug path; the default
+    nothing materialized) and leaves the pruned corpus cache pinned until
+    :func:`session.release_pins` — the plan-audit/debug path; the default
     materializes the |probes|×k answer and frees the cache (leak fix).
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     # one pruned (id, vec) cache feeds BOTH the Lloyd rounds and the
@@ -725,10 +722,10 @@ def ann_topk_ivf_batch(
     # the Arrow/codegen crossover (re-assigning with the literal-fold
     # expression at 16 lists paid a ~5 s one-time janino compile — the
     # r3 bench regression)
-    pruned = spread(
+    pruned = pin(spread(
         df.where(F.col(vec_col).isNotNull())
         .select(F.col(id_col), _as_double(vec_col).alias("__v"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     try:
         cents = _ivf_fit(pruned, id_col, n_lists, iters)
         assigned = _assign_lists(pruned, cents, "__v", "__list")

@@ -155,8 +155,7 @@ def vocab_coverage(
       split handles it — the per-count side is one row per key.
 
     The full-curve path pins two histograms via ``_hist_cumsum``;
-    long-lived sessions release them with
-    ``accuracy.release_histogram_caches()``."""
+    long-lived sessions release them with ``session.release_pins()``."""
     from pyspark.sql import Window
 
     toks = spread(df.select(F.col(text_col))).select(

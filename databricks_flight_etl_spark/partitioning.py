@@ -29,7 +29,8 @@ def _file_leaf_stats(df: DataFrame) -> tuple[int, int]:
     double — correct for a parallelism estimate). Subquery expressions
     are not descended into: they do not govern this frame's
     partitioning. ``(0, 0)`` when the plan has no file leaves
-    (LocalRelation / LogicalRDD / Range sources)."""
+    (LocalRelation / LogicalRDD / Range sources, and non-file
+    relations such as JDBC, which have no ``location()``)."""
     total = 0
     n_files = 0
     stack = [df._jdf.queryExecution().analyzed()]
@@ -39,8 +40,9 @@ def _file_leaf_stats(df: DataFrame) -> tuple[int, int]:
         n = children.size()
         if n == 0 and node.nodeName() == "LogicalRelation":
             rel = node.relation()
-            total += rel.sizeInBytes()
-            n_files += len(rel.location().inputFiles())
+            if rel.getClass().getSimpleName() == "HadoopFsRelation":
+                total += rel.sizeInBytes()
+                n_files += len(rel.location().inputFiles())
         for i in range(n):
             stack.append(children.apply(i))
     return total, n_files

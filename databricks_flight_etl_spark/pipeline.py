@@ -7,6 +7,8 @@ write, re-scanning the source CSV for every action (~10+ full scans —
 its dominant cost, SURVEY §3). Here the cleaned DataFrame is persisted
 once and every profile fans out from it (SURVEY §4.3 "cache once, fan
 out"); at 100 TB substitute a parquet/Delta checkpoint for the persist.
+Every persist here goes through :func:`session.pin`, so a long-lived
+session frees a run's caches with :func:`session.release_pins`.
 """
 
 from __future__ import annotations
@@ -14,7 +16,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 from .functions import derive_departure_timestamp
 from .operators import (
@@ -24,6 +25,7 @@ from .operators import (
     uniqueness,
     validity,
 )
+from .session import pin
 from .sources import write_parquet
 
 __all__ = ["QualityReport", "run_flight_pipeline",
@@ -67,7 +69,7 @@ def run_flight_pipeline(
     cleaned, dropped = completeness.drop_allnull_columns(df)
     if derive_ts and "DepTime" in cleaned.columns:
         cleaned = derive_departure_timestamp(cleaned)
-    cleaned = cleaned.persist(StorageLevel.MEMORY_AND_DISK)
+    cleaned = pin(cleaned)
 
     report = QualityReport(
         cleaned=cleaned,
@@ -149,7 +151,6 @@ def run_textprep_pipeline(
     max_per_domain: int | None = None,
     near_dup_max_df: int | None = None,
     near_dup_max_df_frac: float | None = None,
-    near_dup_stops: DataFrame | None = None,
     near_dup_guard: str = "warn",
 ) -> TextPrepReport:
     """LLM training-data preprocessing over a documents table: quality
@@ -183,11 +184,10 @@ def run_textprep_pipeline(
     verify — the boilerplate-heavy-corpus knob that keeps LSH
     candidates sub-quadratic; see
     :func:`operators.dedup.shingle_stop_list`. ``near_dup_max_df_frac``
-    is its corpus-relative form, ``near_dup_stops`` a precomputed stop
-    list (skips the in-funnel df pass and its shingle-table cache),
-    and ``near_dup_guard`` the pre-flight entropy guard mode — all
-    forwarded verbatim to :func:`operators.dedup.minhash_dedup_pairs`,
-    whose footprint/eagerness notes apply. When the guard actually
+    is its corpus-relative form, and ``near_dup_guard`` the pre-flight
+    entropy guard mode — all forwarded verbatim to
+    :func:`operators.dedup.minhash_dedup_pairs`, whose
+    footprint/eagerness notes apply. When the guard actually
     runs (near-dup on, no mitigation knob, guard != 'off'), its
     measured profile — including ``bg_jaccard_est``, the number that
     predicts LSH blow-up — lands in ``report.guard_profile`` instead
@@ -208,13 +208,11 @@ def run_textprep_pipeline(
     # expression chain re-executes for each — measured 2.4× the funnel's
     # cold wall-clock at sf0.1. At 100 TB substitute a parquet
     # checkpoint (module docstring).
-    lang_kept = quality_kept.where(
-        F.col("lang_guess").isin(*langs)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    lang_kept = pin(quality_kept.where(F.col("lang_guess").isin(*langs)))
 
     exact_unique = dedup.exact_dedup(lang_kept, text_col, id_col)
     if near_dup:
-        exact_unique = exact_unique.persist(StorageLevel.MEMORY_AND_DISK)
+        exact_unique = pin(exact_unique)
         # bands default to the threshold-derived shape (auto_bands):
         # the pipeline takes an arbitrary threshold, and a fixed
         # bands=4 under-recalls below its j~=0.84 midpoint; certified
@@ -231,7 +229,6 @@ def run_textprep_pipeline(
             else dedup.auto_bands(32, near_dup_threshold),
             max_df=near_dup_max_df,
             max_df_frac=near_dup_max_df_frac,
-            stops=near_dup_stops,
             guard=near_dup_guard,
         )
         # The guard runs (eagerly, inside the call above) exactly when
@@ -243,7 +240,6 @@ def run_textprep_pipeline(
         guard_ran = (
             near_dup_max_df is None
             and near_dup_max_df_frac is None
-            and near_dup_stops is None
             and near_dup_guard != "off"
         )
         guard_profile = dedup.last_guard_profile() if guard_ran else None
@@ -323,11 +319,11 @@ def run_corpus_release(
     # unpinned, that pass re-ran once per consumer (guide §5 — persist
     # exactly the reused-and-expensive intermediates). At 100 TB
     # substitute a parquet checkpoint (module docstring).
-    with_tokens = redacted.select(
+    with_tokens = pin(redacted.select(
         F.col(id_col),
         "clean",
         F.size(text.tokens(F.col("clean"))).alias("n_tokens"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     packed = pack_by_token_budget(with_tokens, id_col, "n_tokens", budget)
     released = packed.join(
         with_tokens.select(F.col(id_col), "clean"), id_col

@@ -11,8 +11,10 @@ import atexit
 import os
 import shutil
 import tempfile
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 # Startup-time scratch root, created lazily once per process. mkdtemp
 # (not a bare pid suffix) so a recycled pid can never resurrect a dead
@@ -33,6 +35,75 @@ def _scratch_root() -> str:
         atexit.register(shutil.rmtree, root, ignore_errors=True)
         _SCRATCH_ROOT = root
     return _SCRATCH_ROOT
+
+
+# Every persisted intermediate whose release the creating function
+# cannot own (it returns a lazy frame, so the caller's later action
+# still reads the cache), least recently pinned first, keyed by plan:
+# (semanticHash, frame). The cap bounds a session that never releases:
+# MEMORY_AND_DISK's memory half is LRU-evictable but its disk half is
+# not.
+_PINS: list[tuple[int, DataFrame]] = []
+_PINS_LOCK = threading.Lock()
+_MAX_PINS = 32
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # session already stopped — nothing left to free
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK) and register it for release.
+
+    Pin a subplan that downstream code references more than once:
+    without it, every reference re-executes the whole lineage back to
+    the source scan (a plan audit showed the banded-LSH join reading
+    the corpus 76×).
+
+    ``unpersist()`` drops every plan-equal cache at once, so the
+    registry holds one entry per plan (``semanticHash``, confirmed by
+    ``sameSemantics``): re-pinning a plan-equal frame refreshes its
+    entry instead of adding one, and eviction (least recently pinned
+    first, past ``_MAX_PINS``) or :func:`release_pins` unpersists each
+    plan exactly once. Unpersisting is always safe for correctness: a
+    lazy result whose pinned input was freed recomputes that lineage
+    on its next action. At 100 TB, checkpoint these tables to parquet
+    instead."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    key = df.semanticHash()
+    evicted = None
+    with _PINS_LOCK:
+        for i, (h, old) in enumerate(_PINS):
+            if h == key and old.sameSemantics(df):
+                del _PINS[i]
+                break
+        _PINS.append((key, df))
+        if len(_PINS) > _MAX_PINS:
+            evicted = _PINS.pop(0)[1]
+    if evicted is not None:
+        _unpersist(evicted)
+    return df
+
+
+def release_pins() -> int:
+    """Unpersist every frame :func:`pin` holds and return how many
+    plans were released.
+
+    Operators pin reused intermediates but return lazy frames, so
+    neither they nor their callers can unpersist before the caller's
+    action. A batch job frees everything at session end; a long-lived
+    session running many one-shot jobs should call this between them.
+    Thread-safe and idempotent."""
+    with _PINS_LOCK:
+        drained = [df for _, df in _PINS]
+        _PINS.clear()
+    for df in drained:
+        _unpersist(df)
+    return len(drained)
+
 
 # Runtime-settable confs that correctness depends on (timezone) or that
 # keep small-scale plans sane. Applied by tune() even to sessions we did

@@ -52,24 +52,23 @@ def test_guard_profile_identical_pinned_vs_unpinned(spark, docs):
     assert got["triggered"] == (got["bg_jaccard_est"] > got["threshold"])
 
 
-def test_union_find_stashes_exact_drop_count(spark):
-    """_cc_driver_union_find's advisory _cc_n_drop equals the count()
+def test_union_find_returns_exact_drop_count(spark):
+    """The driver union-find's returned drop count equals the count()
     the broadcast gate previously paid for — on a forest with chains,
     a cycle and singleton-free structure."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (10, 11), (20, 21), (21, 22), (22, 23)],
         "id_a long, id_b long",
     )
-    cc = graph.connected_components(edges)
-    n_drop = getattr(cc, "_cc_n_drop", None)
+    cc, n_drop = graph._components(edges)
     assert n_drop is not None
     assert n_drop == cc.where(F.col("node") != F.col("component")).count()
 
 
-def test_dedup_survivors_unchanged_by_gate_elision(spark):
+def test_dedup_survivors_unchanged_by_gate_elision(spark, monkeypatch):
     """Survivor selection end-to-end: same rows whether the gate count
-    comes from the stashed driver value (fast path) or a count() over a
-    frame that lost the attribute (forced distributed loop)."""
+    comes from the driver union-find (fast path) or from a count()
+    (forced distributed loop, which returns no drop count)."""
     df = spark.createDataFrame(
         [(i, f"row {i}") for i in range(12)], "id long, payload string"
     )
@@ -77,10 +76,14 @@ def test_dedup_survivors_unchanged_by_gate_elision(spark):
         [(1, 2), (2, 5), (7, 9)], "id_a long, id_b long"
     )
     fast = graph.dedup_survivors(df, pairs, "id")
-    # driver_max_edges=0 forces the distributed loop, whose labels
-    # carry no stashed count — exercising the count() fallback
-    cc = graph.connected_components(pairs, driver_max_edges=0)
-    assert getattr(cc, "_cc_n_drop", None) is None
+    # driver_max_edges=0 forces the distributed loop, which knows no
+    # drop count — exercising the count() fallback
+    assert graph._components(pairs, driver_max_edges=0)[1] is None
+    components = graph._components
+    monkeypatch.setattr(
+        graph, "_components",
+        lambda e, src, dst: components(e, src, dst, driver_max_edges=0),
+    )
     slow = graph.dedup_survivors(
         df, pairs, "id", broadcast_max_rows=8_000_000
     )

@@ -137,3 +137,24 @@ def test_spread_estimate_formula_scale_adaptive(spark, monkeypatch):
         partitioning, "_file_leaf_stats", fake_stats(0, 0)
     )
     assert partitioning._estimated_scan_splits(df, 32) is None
+
+
+def test_spread_on_jdbc_relation(spark):
+    """A JDBC source is a LogicalRelation without a file index: the
+    leaf walk must skip it (no ``location()`` call) and spread falls
+    back to the scan's partition count instead of raising."""
+    url = f"jdbc:derby:memory:spread_{uuid.uuid4().hex};create=true"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        st = conn.createStatement()
+        st.executeUpdate("CREATE TABLE docs (doc_id BIGINT, body VARCHAR(20))")
+        for i in range(10):
+            st.executeUpdate(f"INSERT INTO docs VALUES ({i}, 'row {i}')")
+        df = spark.read.jdbc(url, "docs")
+        assert partitioning._file_leaf_stats(df) == (0, 0)
+        out = partitioning.spread(df, "DOC_ID")
+        target = spark.sparkContext.defaultParallelism
+        assert out.rdd.getNumPartitions() == target
+        assert sorted(r["DOC_ID"] for r in out.collect()) == list(range(10))
+    finally:
+        conn.close()

@@ -160,13 +160,14 @@ def test_hist_cumsum_bucket_on_string_values(spark):
 
 def test_hist_cumsum_release_path(spark):
     """Verdict task #3: after a _hist_cumsum-backed operator's action
-    completes, release_histogram_caches() frees every pinned block —
-    no persisted RDDs remain."""
+    completes, release_pins() frees every pinned block — no persisted
+    RDDs remain."""
     from databricks_flight_etl_spark.operators.accuracy import (
-        ks_statistic, quantiles_exact, release_histogram_caches,
+        ks_statistic, quantiles_exact,
     )
+    from databricks_flight_etl_spark.session import release_pins
 
-    release_histogram_caches()  # drop pins from earlier tests
+    release_pins()  # drop pins from earlier tests
 
     def rdd_ids():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -181,8 +182,8 @@ def test_hist_cumsum_release_path(spark):
     quantiles_exact(a, "x", [0.5, 0.9]).collect()
     pinned = rdd_ids() - base
     assert pinned  # pins exist pre-release
-    released = release_histogram_caches()
+    released = release_pins()
     assert released >= 2
     assert not (rdd_ids() & pinned)  # every new pin is gone
     # idempotent
-    assert release_histogram_caches() == 0
+    assert release_pins() == 0

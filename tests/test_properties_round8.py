@@ -5,6 +5,7 @@ verdict-task interleaved cache-release contract."""
 
 import math
 import os
+import sys
 import threading
 
 import pytest
@@ -76,12 +77,11 @@ def test_release_interleaved_operators(spark):
     BETWEEN building and materializing their lazy results: both must
     still compute correctly (unpersist costs a recompute, never a
     wrong answer)."""
-    from databricks_flight_etl_spark.operators.accuracy import (
-        ks_drift_report, release_histogram_caches,
-    )
+    from databricks_flight_etl_spark.operators.accuracy import ks_drift_report
     from databricks_flight_etl_spark.operators.text import vocab_coverage
+    from databricks_flight_etl_spark.session import release_pins
 
-    release_histogram_caches()
+    release_pins()
 
     ev = spark.range(400).select(
         F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
@@ -94,39 +94,52 @@ def test_release_interleaved_operators(spark):
     # build BOTH lazily (each pins histograms), release, THEN act
     drift = ks_drift_report(ev, ["x", "y"], "g", "a", "b")
     curve = vocab_coverage(docs, "text")
-    released = release_histogram_caches()
+    released = release_pins()
     assert released > 0
 
     got = {r.column: r.ks_stat for r in drift.collect()}
     assert set(got) == {"x", "y"} and all(v is not None for v in got.values())
     rows = {(r.token, r.n, r.rank) for r in curve.collect()}
     assert ("c", 4, 1) in rows and ("a", 2, 2) in rows
-    release_histogram_caches()
+    release_pins()
 
 
 def test_pinned_registry_is_capped_and_thread_safe(spark):
-    """_PINNED_HISTS is lock-guarded and FIFO-capped: concurrent
-    registration from many threads never grows past _MAX_PINNED, so a
-    long-lived session that never calls release cannot accumulate
-    disk blocks without bound."""
-    from databricks_flight_etl_spark.operators import accuracy as acc
+    """The pin registry is lock-guarded and capped: concurrent pins from
+    many threads never grow it past _MAX_PINS, so a long-lived session
+    that never calls release cannot accumulate disk blocks without
+    bound. Each thread pins its own plans (plan-equal frames share one
+    entry), 48 distinct plans in all."""
+    from databricks_flight_etl_spark import session
 
-    acc.release_histogram_caches()
-    frames = [spark.range(1) for _ in range(8)]
+    session.release_pins()
 
-    def worker():
-        for _ in range(20):
-            for fr in frames:
-                acc._register_pin(fr)
+    errors = []
 
-    threads = [threading.Thread(target=worker) for _ in range(6)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert len(acc._PINNED_HISTS) <= acc._MAX_PINNED
-    assert acc.release_histogram_caches() <= acc._MAX_PINNED
-    assert len(acc._PINNED_HISTS) == 0
+    def worker(t):
+        try:
+            frames = [spark.range(1000 * t + i + 1) for i in range(8)]
+            for _ in range(3):
+                for fr in frames:
+                    session.pin(fr)
+        except Exception as exc:  # noqa: BLE001 - asserted empty below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(6)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(session._PINS) == session._MAX_PINS
+    assert len({h for h, _ in session._PINS}) == session._MAX_PINS
+    assert session.release_pins() == session._MAX_PINS
+    assert len(session._PINS) == 0
 
 
 # ---------------------------------------------------------------- #

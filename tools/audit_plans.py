@@ -81,7 +81,7 @@ def generate(sf_dir: str, out=None) -> None:
             w(f"| {name} | audit error: {type(exc).__name__} | | | | | | |")
         finally:
             # Audit COLD plans, order-invariantly: operators persist
-            # shared intermediates (dedup._pin et al.), and a cache
+            # shared intermediates (session.pin), and a cache
             # entry left by an earlier-audited query substitutes an
             # InMemoryRelation into later queries' plans — whose
             # formatted explain then ALSO prints the cached child's

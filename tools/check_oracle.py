@@ -119,7 +119,7 @@ def main() -> int:
                     continue
             spdf = sdf.toPandas()
             srows = [tuple(r) for r in spdf.itertuples(index=False)]
-            spark.catalog.clearCache()  # per-query pins (dedup._pin)
+            spark.catalog.clearCache()  # per-query pins (session.pin)
         except Exception:
             failures.append(name)
             print(f"FAIL {name}: spark error\n{traceback.format_exc()}")

@@ -1,23 +1,25 @@
-"""Count Spark jobs (and wall time) per registry query — the
-noise-immune A/B metric for action-count optimizations (r14 used the
-same statusTracker mechanism ad hoc; this pins it as a tool).
+"""Jobs and wall time per registry query — the noise-immune A/B metric
+for action-count changes (job counts) next to the wall-time spread.
 
 Usage: python tools/count_jobs.py [--sf DIR] [--reps N] q_name [...]
 
-Prints per query: jobs for the FULL run (build + count action),
-plus the median wall of the reps. Job ids are counted via a fresh
-job group per rep, so concurrent sessions don't pollute the count.
+Prints per query: jobs for the FULL run (build + count action) of each
+rep, and the min/median/max wall of the reps. Suite totals swing ±15%
+from host noise, so compare medians, never single runs. Job ids are
+counted via a fresh job group per rep, so concurrent sessions don't
+pollute the count; caches are dropped between reps.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import statistics
 import sys
 import time
 import uuid
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -52,7 +54,8 @@ def main() -> None:
             spark.catalog.clearCache()
         print(
             f"{name}: jobs={n_jobs} wall_median="
-            f"{statistics.median(walls):.2f}s reps={args.reps}"
+            f"{statistics.median(walls):.2f}s min={min(walls):.2f} "
+            f"max={max(walls):.2f} reps={args.reps}"
         )
 
 

@@ -364,8 +364,8 @@ def _vocab_curve(docs):
     the old form ran ONE window over the whole vocabulary)."""
     from pyspark.sql import functions as F
 
-    from databricks_flight_etl_spark.operators import accuracy
     from databricks_flight_etl_spark.operators.text import vocab_coverage
+    from databricks_flight_etl_spark.session import release_pins
 
     hi = docs.select(
         "doc_id",
@@ -387,7 +387,7 @@ def _vocab_curve(docs):
         ).alias("text"),
     )
     n = vocab_coverage(hi, "text").count()
-    accuracy.release_histogram_caches()
+    release_pins()
     return n
 
 
