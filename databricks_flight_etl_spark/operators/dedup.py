@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import math
 import warnings
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -116,18 +115,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return spread(df, "__id")
 
 
-def _shingle_arrays_pre(raw: DataFrame, k: int) -> DataFrame:
-    """Shingle a pre-projected, pre-parallelized (__id, __raw) frame —
-    the shared tail of :func:`_shingle_arrays` for callers that manage
-    the parallelism decision themselves (see ``_jaccard_verified``,
-    where probing the joined plan for narrowness cost more than the
-    whole verify join)."""
-    norm = raw.select("__id", normalize_text("__raw").alias("__t"))
-    return norm.select(
-        "__id", _shingles_of(F.col("__t"), k).alias("__shs")
-    )
-
-
 def _shingle_arrays(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
     """(id, array<string> shingles) — one row per doc, no explode.
     Normalizes through a materializing projection FIRST so the regexp
@@ -141,7 +128,10 @@ def _shingle_arrays(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFr
             F.col(id_col).alias("__id"), F.col(text_col).alias("__raw")
         )
     )
-    return _shingle_arrays_pre(raw, k)
+    norm = raw.select("__id", normalize_text("__raw").alias("__t"))
+    return norm.select(
+        "__id", _shingles_of(F.col("__t"), k).alias("__shs")
+    )
 
 
 def _staged_shingles(
@@ -282,34 +272,37 @@ def resolve_max_df(
     return max(1, math.ceil(max_df_frac * n_docs))
 
 
-# Telemetry from the most recent _bg_jaccard_guard run in this
-# process. At corpus scale the guard's eager aggregate is nontrivial —
-# the number it computes should not be print-only (round-9 verdict
-# stretch): a pipeline that just paid for the measurement can log it.
+# Telemetry from the most recent LSH entry-point call in this process:
+# the guard's profile if that call ran the guard, else None (every call
+# resets it in _near_dup_setup). At corpus scale the guard's eager
+# aggregate is nontrivial — the number it computes should not be
+# print-only: a pipeline that just paid for the measurement can log it.
 _LAST_GUARD_PROFILE: dict | None = None
 
 
 def last_guard_profile() -> dict | None:
-    """Measurement from the most recent pre-flight entropy guard run
-    by a guarded LSH entry point (:func:`minhash_dedup_pairs` /
-    :func:`simhash_near_dup_pairs` with ``guard != 'off'`` and no
-    mitigation knob) in this process.
+    """Measurement from the pre-flight entropy guard of the most recent
+    :func:`minhash_dedup_pairs` / :func:`simhash_near_dup_pairs` call
+    in this process.
 
     Returns a copy of ``{caller, n_docs, total_occurrences,
     pair_mass, bg_jaccard_est, threshold, triggered}`` — the sums-only
     core of :func:`shingle_df_profile` (``bg_jaccard_est`` matches
     that function's column bit-for-bit before its rounding;
-    ``None`` on a degenerate corpus where the estimate is undefined) —
-    or ``None`` if no guard has run yet. Process-local and
-    last-run-wins: read it right after the guarded call you want to
-    log, not from concurrently-driving threads."""
+    ``None`` on a degenerate corpus where the estimate is undefined).
+    Returns ``None`` when that call did not run the guard (a
+    ``max_df``/``max_df_frac``/``stops`` mitigation or ``guard='off'``)
+    or when no such call has been made: every call resets it, so a
+    mitigated call never reports an earlier call's profile. A
+    ``guard='raise'`` call keeps its profile although it raises.
+    Process-local: read it right after the call you want to log, not
+    from concurrently-driving threads."""
     return (None if _LAST_GUARD_PROFILE is None
             else dict(_LAST_GUARD_PROFILE))
 
 
 def _bg_jaccard_guard(
-    st: DataFrame, arrs: DataFrame,
-    guard: str, caller: str = "LSH",
+    st: DataFrame, arrs: DataFrame, guard: str, caller: str,
 ) -> None:
     """Default-on pre-flight entropy guard for the LSH entry points:
     computes the sums-only core of :func:`shingle_df_profile` (the
@@ -337,13 +330,10 @@ def _bg_jaccard_guard(
     the guard. Whenever the guard DOES run, its measurement is retained
     for logging — read it back via :func:`last_guard_profile` (round-9
     verdict stretch: the eager work is nontrivial at corpus scale, so
-    its result should not be print-only)."""
-    if guard == "off":
-        return
-    if guard not in ("warn", "raise"):
-        raise ValueError(
-            f"guard must be 'warn', 'raise' or 'off', got {guard!r}"
-        )
+    its result should not be print-only).
+
+    ``guard`` is 'warn' or 'raise', already validated by
+    :func:`_near_dup_setup`, the only caller."""
     d19 = F.col("df").cast("decimal(19,0)")
     stats = (
         st.groupBy("__sh").agg(F.count(F.lit(1)).alias("df"))
@@ -398,7 +388,9 @@ def _bg_jaccard_guard(
     )
     if guard == "raise":
         raise ValueError(msg)
-    warnings.warn(msg, RuntimeWarning, stacklevel=3)
+    # blame the entry point's caller: this frame, _near_dup_setup, the
+    # entry point, then its caller
+    warnings.warn(msg, RuntimeWarning, stacklevel=4)
 
 
 def shingle_stop_list(
@@ -462,7 +454,6 @@ def shingle_stop_list(
 def shingle_df_profile(
     df: DataFrame, text_col: str, id_col: str,
     shingle_k: int = 5, decimals: int = 6,
-    table: DataFrame | None = None,
 ) -> DataFrame:
     """PRE-FLIGHT entropy diagnostic for similarity/dedup jobs: one row
     describing the corpus' shingle document-frequency distribution —
@@ -490,14 +481,11 @@ def shingle_df_profile(
     gated on its denominator, so the row is identical whether the
     session runs with spark.sql.ansi.enabled or not — an unguarded
     division would return NULL under default semantics but raise
-    DIVIDE_BY_ZERO under ANSI). ``table`` (optional) supplies a
-    prebuilt ``_shingle_table`` frame, same contract as
-    :func:`shingle_stop_list`."""
+    DIVIDE_BY_ZERO under ANSI)."""
     from .accuracy import quantiles_exact
 
     dfreq = pin(
-        shingle_stop_list(df, text_col, id_col, shingle_k, max_df=0,
-                          table=table)
+        shingle_stop_list(df, text_col, id_col, shingle_k, max_df=0)
     )  # max_df=0 → every shingle with its df
     n_docs = df.where(F.col(text_col).isNotNull()).select(
         F.count(F.lit(1)).alias("n_docs")
@@ -544,6 +532,78 @@ def shingle_df_profile(
             .otherwise(null_d).alias("bg_jaccard_est"),
         )
     )
+
+
+def _near_dup_setup(
+    df: DataFrame, text_col: str, id_col: str, shingle_k: int,
+    max_df: int | None, max_df_frac: float | None,
+    stops: DataFrame | None, guard: str, output: str, caller: str,
+) -> tuple[DataFrame | None, DataFrame | None, DataFrame | None]:
+    """The stop-shingle decision shared by :func:`minhash_dedup_pairs`
+    and :func:`simhash_near_dup_pairs`: validate ``output``/``guard``/
+    ``stops`` exclusivity, resolve ``max_df_frac``, stage the shingles,
+    then build the stop list from ``max_df`` or run the pre-flight
+    guard. Resets :func:`last_guard_profile` first, so it reports this
+    call's guard or ``None``.
+
+    Returns ``(arrs, st, stops)``: the :func:`_staged_shingles` pair
+    and the stop list to exclude (``None`` for an unmitigated call).
+    The shingles stage only when the df pass or the guard reads them
+    besides the signature; with a caller-supplied ``stops``, or with
+    ``guard='off'`` and no ``max_df``, the pair is ``(None, None)``,
+    and a caller with another reader (minhash's verify) stages them
+    itself."""
+    global _LAST_GUARD_PROFILE
+    _LAST_GUARD_PROFILE = None
+    if output not in ("pairs", "clusters"):
+        raise ValueError(
+            f"output must be 'pairs' or 'clusters', got {output!r}"
+        )
+    if guard not in ("warn", "raise", "off"):
+        # validate up front even when a mitigation skips the guard —
+        # a typo'd guard= on a mitigated call should not pass silently
+        raise ValueError(
+            f"guard must be 'warn', 'raise' or 'off', got {guard!r}"
+        )
+    if stops is not None and (max_df is not None or max_df_frac is not None):
+        # exclusivity BEFORE resolve_max_df: the frac form runs an
+        # eager corpus count, and an invalid call must not pay a full
+        # 100 TB scan just to raise
+        raise ValueError(
+            "pass a precomputed stops= list OR max_df/max_df_frac, "
+            "not both"
+        )
+    max_df = resolve_max_df(df, text_col, max_df, max_df_frac)
+    arrs = st = None
+    if stops is None and (max_df is not None or guard != "off"):
+        arrs, st = _staged_shingles(df, text_col, id_col, shingle_k)
+    if stops is not None:
+        stops = stops.select("shingle")  # caller-supplied, never cached
+    elif max_df is not None:
+        # the document-frequency pass reads the shared staging
+        stops = pin(
+            shingle_stop_list(df, text_col, id_col, shingle_k, max_df,
+                              table=st)
+        )
+    elif guard != "off":
+        # pre-flight entropy check over the shared staging (the cache is
+        # materialized by this eager collect and then reused by the
+        # signature + verify passes)
+        _bg_jaccard_guard(st, arrs, guard, caller)
+    return arrs, st, stops
+
+
+def _near_dup_output(pairs: DataFrame, output: str) -> DataFrame:
+    """The ``output=`` tail of the LSH entry points: the verified pairs
+    as they are, or (``'clusters'``) their connected components.
+    ``connected_components`` materializes the projected edge list once
+    on entry (localCheckpoint), so the verify join runs exactly once no
+    matter how many actions the contraction issues."""
+    if output == "clusters":
+        from .graph import connected_components
+
+        return connected_components(pairs.select("id_a", "id_b"))
+    return pairs
 
 
 def minhash_signatures(
@@ -618,11 +678,24 @@ def minhash_bands(
     The band hash is the same derivation :func:`minhash_candidate_pairs`
     uses, so index-vs-probe collisions are identical to a full run's."""
     assert num_perm % bands == 0
-    rows = num_perm // bands
     sig = minhash_signatures(
         df, text_col, id_col, num_perm, shingle_k, hash_family,
         stops=stops, table=table,
     )
+    return _band_stack(sig, id_col, num_perm, bands, hash_family)
+
+
+def _band_stack(
+    sig: DataFrame, id_col: str, num_perm: int, bands: int,
+    hash_family: str,
+) -> DataFrame:
+    """(id, band, band_hash) from the ``mh_j`` signature columns: band
+    ``b`` hashes its ``num_perm // bands`` rows with the band index,
+    then one ``stack`` turns the band columns into rows. The one band
+    derivation behind :func:`minhash_bands` and
+    :func:`minhash_bands_rowwise`; ``hash_family`` was validated by
+    ``_base_hash`` when the signature was built."""
+    rows = num_perm // bands
     band_cols = []
     for b in range(bands):
         cols = [F.col(f"mh_{b * rows + r}") for r in range(rows)]
@@ -638,11 +711,12 @@ def minhash_bands(
         else:
             bh = F.xxhash64(*cols, F.lit(b))
         band_cols.append(bh.alias(f"bh_{b}"))
-    banded = sig.select(F.col(id_col), *band_cols)
     stack = "stack({n}, {args}) as (band, band_hash)".format(
         n=bands, args=", ".join(f"{b}, bh_{b}" for b in range(bands))
     )
-    return banded.select(F.col(id_col), F.expr(stack))
+    return sig.select(F.col(id_col), *band_cols).select(
+        F.col(id_col), F.expr(stack)
+    )
 
 
 def minhash_bands_rowwise(
@@ -658,16 +732,13 @@ def minhash_bands_rowwise(
     evaluate interpreted — see minhash_signatures' docstring), which
     buys the property that matters for STREAMING: a stateless narrow
     projection is legal on an unbounded DataFrame, where the agg form
-    would need a streaming aggregate. Use the agg form for batch."""
+    would need a streaming aggregate. Use the agg form for batch.
+
+    The shingle base hash (``_base_hash``, so an unknown
+    ``hash_family`` raises here as it does there) and the band
+    derivation (``_band_stack``) are the agg path's own."""
     assert num_perm % bands == 0
-    rows = num_perm // bands
     p = F.lit(_MINHASH_PRIME)
-
-    def base(s: Column) -> Column:
-        if hash_family == "xxhash64":
-            return F.xxhash64(s)
-        return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-
     norm = df.select(
         F.col(id_col), normalize_text(F.col(text_col)).alias("__t")
     )
@@ -675,7 +746,7 @@ def minhash_bands_rowwise(
         F.col(id_col),
         F.transform(
             _shingles_of(F.col("__t"), shingle_k),
-            lambda s: F.pmod(base(s), p),
+            lambda s: F.pmod(_base_hash(s, hash_family), p),
         ).alias("__hs"),
     )
     # The num_perm affine-min columns are built as ONE selectExpr parse
@@ -695,24 +766,7 @@ def minhash_bands_rowwise(
             f"pmod(h * {aj}L + {bj}L, {_MINHASH_PRIME}L))) AS mh_{j}"
         )
     sig = hs.selectExpr(f"`{id_col}`", *sig_exprs)
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{b * rows + r}") for r in range(rows)]
-        if hash_family == "md5":
-            bh = F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", *cols, F.lit(b))), 1, 15
-                ), 16, 10,
-            ).cast("long")
-        else:
-            bh = F.xxhash64(*cols, F.lit(b))
-        band_cols.append(bh.alias(f"bh_{b}"))
-    stack = "stack({n}, {args}) as (band, band_hash)".format(
-        n=bands, args=", ".join(f"{b}, bh_{b}" for b in range(bands))
-    )
-    return sig.select(F.col(id_col), *band_cols).select(
-        F.col(id_col), F.expr(stack)
-    )
+    return _band_stack(sig, id_col, num_perm, bands, hash_family)
 
 
 def minhash_probe(
@@ -730,9 +784,10 @@ def minhash_probe(
     ACCEPTED corpus? Bands only the increment (tiny vs the corpus),
     equi-joins it against the persisted :func:`minhash_bands` index,
     then exact-Jaccard-verifies candidates — shingling only the
-    candidate-touched docs on either side (``_jaccard_verified``'s
-    left-semi prune). The corpus signature work is never redone; the
-    per-increment cost is O(increment) + O(candidates).
+    candidate-touched docs on either side (a left-semi prune of the raw
+    texts to the candidate ids, ahead of ``_shingle_arrays``). The
+    corpus signature work is never redone; the per-increment cost is
+    O(increment) + O(candidates).
 
     ``corpus_df`` supplies (id, text) for the verify step only — at
     scale, the same parquet the corpus was released from. New-vs-new
@@ -766,8 +821,15 @@ def minhash_probe(
     both = new_df.select(F.col(id_col), F.col(text_col)).unionByName(
         corpus_df.select(F.col(id_col), F.col(text_col))
     )
+    # prune the raw docs BEFORE shingling: only candidate docs pay the
+    # normalize + shingle work (AQE broadcasts the small id set)
+    docs = both.join(
+        _pair_ids(cands).withColumnRenamed("__id", id_col), id_col,
+        "left_semi",
+    )
     out = _jaccard_verified(
-        both, text_col, id_col, cands, threshold, shingle_k, stops=stops,
+        cands, threshold,
+        _shingle_arrays(docs, text_col, id_col, shingle_k), stops,
     )
     return out.select(
         F.col("id_a").alias("new_id"),
@@ -838,11 +900,19 @@ def minhash_candidate_pairs(
     )
 
 
+def _pair_ids(pairs: DataFrame) -> DataFrame:
+    """The distinct doc ids (``__id``) named by an (id_a, id_b) pair
+    frame — the candidate docs, the only ones verify needs."""
+    return (
+        pairs.select(F.col("id_a").alias("__id"))
+        .unionByName(pairs.select(F.col("id_b").alias("__id")))
+        .distinct()
+    )
+
+
 def _jaccard_verified(
-    df: DataFrame, text_col: str, id_col: str, pairs: DataFrame,
-    threshold: float, shingle_k: int,
-    stops: DataFrame | None = None,
-    arrs: DataFrame | None = None,
+    pairs: DataFrame, threshold: float, arrs: DataFrame,
+    stops: DataFrame | None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs: join each pair to
     its two pinned per-doc shingle arrays and take
@@ -855,50 +925,14 @@ def _jaccard_verified(
     same arrays `_shingle_arrays` materializes anyway; the shuffle
     payload is the candidate docs' shingle arrays (≈ text size).
 
-    Only docs that appear in some candidate pair are even SHINGLED
-    (left-semi prune on the raw docs, before the shingle projection) —
-    verification cost scales with the candidate set, not the corpus.
-
-    ``arrs`` (optional): an ALREADY-PINNED ``_shingle_arrays`` frame
-    from the caller's shared staging (see :func:`_staged_shingles`) —
-    the semi prune then runs over the materialized arrays instead of
-    re-normalizing + re-shingling the pruned raw docs, and the
-    narrow-scan probe (a full physical planning of the corpus
-    projection) is skipped entirely."""
-    ids = (
-        pairs.select(F.col("id_a").alias("__id"))
-        .unionByName(pairs.select(F.col("id_b").alias("__id")))
-        .distinct()
-    )
-    if arrs is not None:
-        # shared staging: prune the pinned arrays to candidate docs
-        # (AQE broadcasts small ids); partitioning/spread decisions were
-        # already taken when the staging was built
-        arrs = arrs.join(ids, "__id", "left_semi")
-    else:
-        # prune + canonicalize BEFORE the semi join so the narrow-scan
-        # probe below plans ONLY the corpus projection (null filter
-        # still pushes to the scan; filter and semi join commute)
-        base = df.where(F.col(text_col).isNotNull()).select(
-            F.col(id_col).alias("__id"), F.col(text_col).alias("__raw")
-        )
-        docs = base.join(ids, "__id", "left_semi")  # AQE broadcasts ids
-        # Narrow-scan detection runs on the CORPUS plan, not the joined
-        # plan: probing docs.rdd here forced full physical planning of
-        # the entire candidate lineage — measured ~8 s of cold driver
-        # time at sf0.1, the q_minhash_clusters fixed-overhead floor
-        # (round-11) — while a broadcast semi join preserves base's
-        # partitioning anyway, so base's split count IS the joined
-        # side's in exactly the case the spread matters (few-split scan
-        # + small candidate set). When the ids side is instead
-        # shuffle-joined, the output is already target-partitioned and
-        # the extra keyed repartition of the (small, candidates-only)
-        # doc set is one cheap exchange.
-        sc_ = df.sparkSession.sparkContext
-        if (not df.isStreaming
-                and base.rdd.getNumPartitions() < sc_.defaultParallelism):
-            docs = docs.repartition(sc_.defaultParallelism, "__id")
-        arrs = _shingle_arrays_pre(docs, shingle_k)
+    ``arrs`` is a ``_shingle_arrays`` frame (``__id``, ``__shs``)
+    already pruned to the candidate docs (:func:`_pair_ids`), so the
+    stop-shingle regroup and the pinned verify input scale with the
+    candidate set, not the corpus: :func:`minhash_dedup_pairs` semi-
+    joins its pinned staging (see :func:`_staged_shingles`), and
+    :func:`minhash_probe` shingles only the candidate docs' raw texts.
+    Partitioning was decided where ``arrs`` was built. ``stops`` (or
+    ``None``) is the exclusion the signature side applied."""
     if stops is not None:
         # Jaccard over the FILTERED sets — the same exclusion the
         # signature side applied, so verify and banding agree. Explode →
@@ -1024,62 +1058,26 @@ def minhash_dedup_pairs(
     collected as a full pair list."""
     if bands is None:
         bands = auto_bands(num_perm, threshold)
-    if output not in ("pairs", "clusters"):
-        raise ValueError(
-            f"output must be 'pairs' or 'clusters', got {output!r}"
-        )
-    if guard not in ("warn", "raise", "off"):
-        # validate up front even when a mitigation skips the guard —
-        # a typo'd guard= on a mitigated call should not pass silently
-        raise ValueError(
-            f"guard must be 'warn', 'raise' or 'off', got {guard!r}"
-        )
-    if stops is not None and (max_df is not None or max_df_frac is not None):
-        # exclusivity BEFORE resolve_max_df: the frac form runs an
-        # eager corpus count, and an invalid call must not pay a full
-        # 100 TB scan just to raise
-        raise ValueError(
-            "pass a precomputed stops= list OR max_df/max_df_frac, "
-            "not both"
-        )
-    max_df = resolve_max_df(df, text_col, max_df, max_df_frac)
     # One pinned shingle pass feeds the guard, the stop-list df pass,
     # the signatures AND the verify arrays (see _staged_shingles).
-    arrs, st = _staged_shingles(df, text_col, id_col, shingle_k)
-    if stops is not None:
-        stops = stops.select("shingle")  # caller-supplied, never cached
-    elif max_df is not None:
-        # the document-frequency pass reads the shared staging
-        stops = pin(
-            shingle_stop_list(df, text_col, id_col, shingle_k, max_df,
-                              table=st)
-        )
-    elif guard != "off":
-        # pre-flight entropy check over the shared staging (the cache is
-        # materialized by this eager collect and then reused by the
-        # signature + verify passes)
-        _bg_jaccard_guard(
-            st, arrs, guard, caller="minhash_dedup_pairs",
-        )
+    arrs, st, stops = _near_dup_setup(
+        df, text_col, id_col, shingle_k, max_df, max_df_frac, stops,
+        guard, output, caller="minhash_dedup_pairs",
+    )
+    if arrs is None:  # no df pass or guard: signatures + verify share
+        arrs, st = _staged_shingles(df, text_col, id_col, shingle_k)
     cands = pin(
         minhash_candidate_pairs(
             df, text_col, id_col, num_perm, bands, shingle_k,
             hash_family, stops=stops, table=st,
         )
     )
-    out = _jaccard_verified(
-        df, text_col, id_col, cands, threshold, shingle_k,
-        stops=stops, arrs=arrs,
+    # verify reads the pinned staging pruned to the candidate docs
+    # (AQE broadcasts the small id set)
+    arrs = arrs.join(_pair_ids(cands), "__id", "left_semi")
+    return _near_dup_output(
+        _jaccard_verified(cands, threshold, arrs, stops), output
     )
-    if output == "clusters":
-        from .graph import connected_components
-
-        # connected_components materializes the projected edge list
-        # once on entry (localCheckpoint), so the expensive verify
-        # join above runs exactly once no matter how many actions the
-        # contraction issues — no extra pin needed here
-        return connected_components(out.select("id_a", "id_b"))
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1185,55 +1183,18 @@ def simhash_near_dup_pairs(
     verbatim, as does ``output='clusters'`` (O(n) CC labeling instead
     of the pair list — the shape to use when the Hamming-ball pair
     population is itself quadratic, as on the 30× probe corpus)."""
-    if output not in ("pairs", "clusters"):
-        raise ValueError(
-            f"output must be 'pairs' or 'clusters', got {output!r}"
-        )
-    if guard not in ("warn", "raise", "off"):
-        # up-front validation — see minhash_dedup_pairs
-        raise ValueError(
-            f"guard must be 'warn', 'raise' or 'off', got {guard!r}"
-        )
-    if stops is not None and (max_df is not None or max_df_frac is not None):
-        # exclusivity BEFORE the eager frac count — see minhash
-        raise ValueError(
-            "pass a precomputed stops= list OR max_df/max_df_frac, "
-            "not both"
-        )
-    max_df = resolve_max_df(df, text_col, max_df, max_df_frac)
-    st = None
-    if stops is not None:
-        # caller-supplied stops: the shingle table has ONE consumer
-        # (the signature sums) — staging would cache a corpus-scale
-        # table for a single read, so the signature pass stays fresh
-        stops = stops.select("shingle")  # never cached
-    elif max_df is not None:
-        # one shared shingle pass for both the df pass and the
-        # signature sums (see minhash_dedup_pairs / _staged_shingles)
-        _, st = _staged_shingles(df, text_col, id_col, shingle_k)
-        stops = pin(
-            shingle_stop_list(df, text_col, id_col, shingle_k, max_df,
-                              table=st)
-        )
-    elif guard != "off":
-        # guard + signature sums share one staged pass — footprint
-        # rationale on minhash_dedup_pairs
-        arrs, st = _staged_shingles(df, text_col, id_col, shingle_k)
-        _bg_jaccard_guard(
-            st, arrs, guard, caller="simhash_near_dup_pairs",
-        )
+    _, st, stops = _near_dup_setup(
+        df, text_col, id_col, shingle_k, max_df, max_df_frac, stops,
+        guard, output, caller="simhash_near_dup_pairs",
+    )
     sig = simhash64(df, text_col, id_col, shingle_k, hash_family,
                     stops=stops, table=st)
-    out = hamming_near_dup_pairs(
-        sig, "simhash", id_col, max_hamming=max_hamming
+    return _near_dup_output(
+        hamming_near_dup_pairs(
+            sig, "simhash", id_col, max_hamming=max_hamming
+        ),
+        output,
     )
-    if output == "clusters":
-        from .graph import connected_components
-
-        # edge materialization happens inside connected_components —
-        # see minhash_dedup_pairs' clusters branch
-        return connected_components(out.select("id_a", "id_b"))
-    return out
 
 
 def hamming_near_dup_pairs(

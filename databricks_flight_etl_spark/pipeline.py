@@ -113,11 +113,12 @@ class TextPrepReport:
     # Pre-flight entropy guard measurement from the near-dup stage
     # (dedup.last_guard_profile()'s dict: caller, n_docs,
     # total_occurrences, pair_mass, bg_jaccard_est, threshold,
-    # triggered), captured when the guard actually ran — i.e. near-dup
-    # on, no mitigation knob, guard != 'off'. None otherwise. The
-    # funnel just PAID for this one-action measurement; a 100 TB operator
-    # should get the measured J_bg in the job's report, not only as a
-    # warning that dies with stderr (round-10 verdict stretch).
+    # triggered), read right after the near-dup call. None when that
+    # call did not run the guard (a mitigation knob, guard='off') or
+    # near-dup is off. The funnel just PAID for this one-action
+    # measurement; a 100 TB operator should get the measured J_bg in
+    # the job's report, not only as a warning that dies with stderr
+    # (round-10 verdict stretch).
     guard_profile: dict | None = None
 
     @property
@@ -231,18 +232,9 @@ def run_textprep_pipeline(
             max_df_frac=near_dup_max_df_frac,
             guard=near_dup_guard,
         )
-        # The guard runs (eagerly, inside the call above) exactly when
-        # no mitigation knob is set and guard != 'off'; gate on that
-        # same condition rather than trusting the process-global
-        # accessor blindly — last_guard_profile() is last-run-wins, and
-        # a mitigated funnel must not pick up a profile left behind by
-        # some EARLIER guarded call in the process.
-        guard_ran = (
-            near_dup_max_df is None
-            and near_dup_max_df_frac is None
-            and near_dup_guard != "off"
-        )
-        guard_profile = dedup.last_guard_profile() if guard_ran else None
+        # None unless the call above ran its guard: every call resets
+        # the accessor, so no earlier call's profile leaks in
+        guard_profile = dedup.last_guard_profile()
         survivors = graph.dedup_survivors(exact_unique, pairs, id_col)
     else:
         # the SQL-oracle-expressible subset of the funnel (near-dup

@@ -5,9 +5,10 @@ columns are pruned, small dims broadcast, top-k avoids a global sort.
 These run against the harness queries at sf0.001 (plan shape, not data,
 is under test)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 

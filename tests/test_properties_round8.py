@@ -502,7 +502,7 @@ def test_lambda_filter_tripwire(spark):
     InMemoryRelation and the count is 0."""
     from databricks_flight_etl_spark import plans
     from databricks_flight_etl_spark.operators.dedup import (
-        _jaccard_verified, _shingle_arrays_pre, shingle_stop_list,
+        _jaccard_verified, _shingle_arrays, shingle_stop_list,
     )
 
     df = _boiler_corpus(spark, n=20)
@@ -512,11 +512,11 @@ def test_lambda_filter_tripwire(spark):
     ids = pairs.select(F.col("id_a").alias("__id")).unionByName(
         pairs.select(F.col("id_b").alias("__id"))
     )
-    docs = df.select(
-        F.col("doc_id").alias("__id"), F.col("text").alias("__raw")
-    ).join(ids, "__id", "left_semi")
+    pruned = _shingle_arrays(df, "text", "doc_id", 7).join(
+        ids, "__id", "left_semi"
+    )
     arrs = (
-        _shingle_arrays_pre(docs, 7)
+        pruned
         .select("__id", F.explode("__shs").alias("__sh"))
         .join(stops.select(F.col("shingle").alias("__sh")), "__sh",
               "left_anti")
@@ -535,8 +535,7 @@ def test_lambda_filter_tripwire(spark):
         .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
     )
     assert plans.lambda_filters(slow) > 0  # the pathology, visible
-    fast = _jaccard_verified(df, "text", "doc_id", pairs, 0.8, 7,
-                             stops=stops)
+    fast = _jaccard_verified(pairs, 0.8, pruned, stops)
     assert plans.lambda_filters(fast) == 0  # pinned boundary absorbs it
     # both shapes produce identical answers
     a = sorted(map(tuple, slow.collect()))

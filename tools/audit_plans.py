@@ -11,9 +11,10 @@ schema widths. Run after adding queries:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def generate(sf_dir: str, out=None) -> None:

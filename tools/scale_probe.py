@@ -16,10 +16,11 @@ probe (the full op set at 100x would take hours).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def synth_docs(spark, n, words=120):
